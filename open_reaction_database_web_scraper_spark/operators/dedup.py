@@ -787,6 +787,14 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("doc_a", "doc_b", "jaccard"))
 
 
+def _is_local_master(master: str) -> bool:
+    """True for ``local`` and ``local[...]``: the executors live in the
+    driver JVM, so a reliable checkpoint cannot recover from anything
+    the application survives. ``local-cluster[...]`` has separate
+    executor JVMs and counts as non-local."""
+    return master == "local" or master.startswith("local[")
+
+
 def connected_components(edges: DataFrame, max_iter: int = 20) -> DataFrame:
     """Connected components by iterative min-label propagation with a
     CONVERGENCE CHECK — the general CC building block for dedup
@@ -801,13 +809,13 @@ def connected_components(edges: DataFrame, max_iter: int = 20) -> DataFrame:
     aggregate per round instead of a label-diff join. Each round's
     labels are ``localCheckpoint``-ed: iterative self-joins otherwise
     double the lineage per round, and at 100 TB the un-truncated plan
-    re-reads the corpus every iteration. Under
-    ``SPARK_GRAFT_PROFILE=cluster`` (profile.py, round 13) each round
-    uses a reliable ``checkpoint()`` to the configured directory
-    instead — on a real cluster a localCheckpoint dies with its
-    executor and every later round becomes unrecoverable. The mode
-    actually used is recorded in ``LAST_CC_CHECKPOINT_MODE``;
-    both variants are output-pinned identical in tests/test_round13.
+    re-reads the corpus every iteration. On any master other than
+    ``local``/``local[...]`` each round uses a reliable
+    ``checkpoint()`` to the SparkContext's checkpoint directory
+    instead: there a localCheckpoint dies with its executor and every
+    later round becomes unrecoverable. The mode actually used is
+    recorded in ``LAST_CC_CHECKPOINT_MODE``; both modes are
+    output-pinned identical in tests/test_round13.
 
     Returns (doc_id, label) for every vertex that appears in edges.
     The module-level ``LAST_CC_ROUNDS`` records how many propagation
@@ -815,10 +823,8 @@ def connected_components(edges: DataFrame, max_iter: int = 20) -> DataFrame:
     the number of rounds ≈ graph diameter is the quantity that grows
     with cluster CHAIN length, not with corpus size).
     """
-    from ..profile import ensure_checkpoint_dir, is_cluster
-
-    if is_cluster():
-        ckpt_root = ensure_checkpoint_dir(edges.sparkSession)
+    sc = edges.sparkSession.sparkContext
+    if not _is_local_master(sc.master):
         _DIAG.cc_checkpoint_mode = "reliable"
         # Reliable checkpoints are NOT reclaimed by the
         # ContextCleaner (unlike localCheckpoint blocks) unless
@@ -833,12 +839,13 @@ def connected_components(edges: DataFrame, max_iter: int = 20) -> DataFrame:
         # directory). The final round's single directory is retained:
         # the returned DataFrame reads it lazily, so it can only be
         # reclaimed by the caller / storage lifecycle — O(1) dirs per
-        # call instead of O(rounds). Local-filesystem roots only (the
-        # local-mode stand-in); on shared storage (hdfs:/s3:) the
-        # walk is skipped and the deployment's lifecycle policy owns
-        # cleanup.
-        local_root = ckpt_root.split(":", 1)[-1] \
-            if ckpt_root.startswith("file:") else ckpt_root
+        # call instead of O(rounds). Local-filesystem roots only; on
+        # shared storage (hdfs:/s3:) the walk is skipped and the
+        # deployment's lifecycle policy owns cleanup. An unset
+        # checkpoint dir skips the walk too, and checkpoint() raises
+        # Spark's own error.
+        ckpt_root = sc.getCheckpointDir() or ""
+        local_root = ckpt_root.removeprefix("file:")
         cleanup = "://" not in ckpt_root and os.path.isdir(local_root)
         prev_dirs: list[str] = []
 

@@ -433,62 +433,21 @@ def vector_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
                  # once, not once per consumer.
                  .cache())
 
-    from ..profile import is_cluster
+    # --- index: nearest refined centroid per corpus vector.
+    index = (corpus.crossJoin(F.broadcast(centroids))
+             .withColumn("dist", -dot(F.col("c"), F.col("centroid")))
+             .groupBy("neighbor_id")
+             .agg(F.min(F.struct("dist", "cell_id", "c")).alias("m"))
+             .select(F.col("m.cell_id").alias("cell_id"),
+                     F.col("neighbor_id"), F.col("m.c").alias("c")))
 
-    if is_cluster():
-        # Cluster profile (profile.py, round 13 — the round-7 A/B's
-        # other branch made executable): collect the N_CELLS-row
-        # codebook ONCE and inline it as a literal, so cell
-        # assignment is a NARROW projection — zero joins, zero
-        # aggregations, zero exchanges for index and probe
-        # assignment. On local[32] the two driver barriers cost
-        # +0.7 s (BASELINE.md round 7), which is why the default
-        # path keeps the crossJoin + min-struct; at 1000 executors
-        # the per-row broadcast-join + min-agg shuffle is the wrong
-        # shape. Bit-identical results: dist reuses the SAME dot
-        # fold over the SAME 6-dp centroid doubles, array_min /
-        # array_sort order struct fields (dist, cell_id) exactly as
-        # the min-struct and the (qdist, cell_id) window do.
-        cent_rows = sorted(centroids.collect(),
-                           key=lambda r: r.cell_id)
-
-        def cell_dists(vec: F.Column) -> F.Column:
-            return F.array(*[
-                F.struct(
-                    (-dot(vec, F.array(*[F.lit(float(x))
-                                         for x in r.centroid])))
-                    .alias("dist"),
-                    F.lit(int(r.cell_id)).alias("cell_id"))
-                for r in cent_rows])
-
-        index = corpus.select(
-            F.array_min(cell_dists(F.col("c")))["cell_id"]
-            .alias("cell_id"),
-            "neighbor_id", F.col("c"))
-        probes = (queries.select(
-            "query_id", "q",
-            F.explode(F.slice(F.array_sort(cell_dists(F.col("q"))),
-                              1, N_PROBE)).alias("p"))
-            .select("query_id", "q",
-                    F.col("p.cell_id").alias("cell_id")))
-    else:
-        # --- index: nearest refined centroid per corpus vector.
-        index = (corpus.crossJoin(F.broadcast(centroids))
-                 .withColumn("dist", -dot(F.col("c"), F.col("centroid")))
-                 .groupBy("neighbor_id")
-                 .agg(F.min(F.struct("dist", "cell_id", "c")).alias("m"))
-                 .select(F.col("m.cell_id").alias("cell_id"),
-                         F.col("neighbor_id"), F.col("m.c").alias("c")))
-
-        # --- probe: N_PROBE nearest cells per query, then exact
-        # rerank.
-        wq = Window.partitionBy("query_id").orderBy("qdist", "cell_id")
-        probes = (queries.crossJoin(F.broadcast(centroids))
-                  .withColumn("qdist", -dot(F.col("q"),
-                                            F.col("centroid")))
-                  .withColumn("prb", F.row_number().over(wq))
-                  .filter(F.col("prb") <= N_PROBE)
-                  .select("query_id", "q", "cell_id"))
+    # --- probe: N_PROBE nearest cells per query, then exact rerank.
+    wq = Window.partitionBy("query_id").orderBy("qdist", "cell_id")
+    probes = (queries.crossJoin(F.broadcast(centroids))
+              .withColumn("qdist", -dot(F.col("q"), F.col("centroid")))
+              .withColumn("prb", F.row_number().over(wq))
+              .filter(F.col("prb") <= N_PROBE)
+              .select("query_id", "q", "cell_id"))
     scored = (probes.join(index, "cell_id")
               .withColumn("cosine",
                           F.round(cosine_similarity(

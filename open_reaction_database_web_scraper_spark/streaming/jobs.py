@@ -24,6 +24,7 @@ import threading
 import time
 import uuid
 
+from pyspark.errors import StreamingQueryException
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -106,12 +107,13 @@ def _chunked_events_dir(spark: SparkSession, sf_dir: str, copies: int = 1,
     # outright"): the previous form filtered chunk == k and wrote,
     # k times — and each filter RECOMPUTED the global ntile window,
     # so building the replay source cost 4 window sorts + 4 writes
-    # (~2.2 s of every dedup-family invocation at sf0.1, measured in
-    # scripts/probe_r13_stream.py). A partitionBy("chunk") write of
-    # the single-partition window output materializes the window once
-    # and emits exactly one part file per chunk value (one task, the
-    # dynamic-partition writer starts a new file per value); the
-    # files are then MOVED into the flat replay dir in chunk order.
+    # (~2.2 s of every dedup-family invocation at sf0.1,
+    # OPTIMIZATION_r13.md "Where the streaming time actually goes").
+    # A partitionBy("chunk") write of the single-partition window
+    # output materializes the window once and emits exactly one part
+    # file per chunk value (one task, the dynamic-partition writer
+    # starts a new file per value); the files are then MOVED into the
+    # flat replay dir in chunk order.
     # Chunks hold the same ROWS per chunk as the old per-filter form
     # (same window, same ntile assignment); within-chunk row order is
     # not guaranteed (the partition sort is by chunk only) — no
@@ -153,81 +155,29 @@ def _chunked_events_dir(spark: SparkSession, sf_dir: str, copies: int = 1,
 
 
 def _run_to_memory(stream_df: DataFrame, mode: str) -> DataFrame:
-    """Drain an availableNow stream and return its output.
+    """Drain an availableNow stream through a memory sink and return
+    its output as the sink's temp view.
 
-    Default (local) path: memory sink — each micro-batch's output is
-    collected to the DRIVER and served from a temp view. That is the
-    measured local optimum (round-13 A/B: parquet streaming sink lost
-    1.5–7 s/query to 32 tiny files per batch plus _spark_metadata
-    commits — guide §6's small-files trap at bench output sizes), and
-    its driver-heap pinning is neutralized by the harnesses'
-    sink-view drops. But a driver-collecting sink is an OOM at the
-    declared 100 TB target (guide §5: the driver does no data work) —
-    the same local-vs-cluster split as the CC checkpoint — so under
-    ``SPARK_GRAFT_PROFILE=cluster`` APPEND-mode streams drain through
-    :func:`_run_to_files` instead (executor-parallel writes, nothing
-    on the driver). Complete/update modes stay on the memory sink in
-    both profiles: a file sink cannot express them (Spark restricts
-    the file sink to append), and their outputs are bounded aggregate
-    states (complete = the aggregate table, update = per-batch delta
-    rows), not the unbounded event-sized output append mode carries.
-    """
-    from ..profile import is_cluster
-
-    if mode == "append" and is_cluster():
-        return _run_to_files(stream_df)
-    name = "s" + uuid.uuid4().hex[:12]
-    MEMORY_SINKS.add(name)
-    q = (stream_df.writeStream.format("memory").queryName(name)
-         .outputMode(mode).trigger(availableNow=True).start())
-    q.awaitTermination()
-    return stream_df.sparkSession.table(name)
-
-
-def _run_to_files(stream_df: DataFrame) -> DataFrame:
-    """Cluster-profile drain: availableNow append stream →
-    executor-parallel parquet, read back lazily (round 14, VERDICT
-    r13 #2). ``foreachBatch`` + a plain batch write rather than the
-    parquet STREAMING sink: that sink pays a _spark_metadata commit
-    per micro-batch and its read-back lists the commit log — half of
-    the measured round-13 small-files cost — while a batch append
-    inside foreachBatch needs neither (the availableNow drain runs
-    once to completion; exactly-once replay of a half-written batch
-    is not a property this return-a-DataFrame contract needs).
-
-    File sizing (guide §6): each batch's output is coalesced to
-    ``SPARK_GRAFT_STREAM_SINK_TASKS`` write tasks when set. The
-    DEFAULT is no coalesce — state-partition-parallel writes — which
-    is the production posture: a real deployment sizes
-    spark.sql.shuffle.partitions (= state partitions) to its data, so
-    per-task batch output lands in the 128 MB–1 GB file band by
-    construction; coalescing below that would serialize the write of
-    exactly the large outputs the cluster profile exists for. The env
-    knob is the local/test lever (tiny per-partition outputs).
-    ``coalesce`` sits ABOVE the stateful operator, so state-store
-    partitioning (fixed by shuffle.partitions) is unchanged — it only
-    merges finished output partitions into fewer write tasks.
+    Each micro-batch's output is collected to the driver. That is the
+    measured local optimum: a parquet streaming sink lost 1.5–7 s per
+    query to tiny per-batch files and ``_spark_metadata`` commits
+    (OPTIMIZATION_r13.md, "file sink instead of memory sink"). The
+    view pins its rows on the driver heap until
+    ``testing.drop_drained_memory_sinks`` drops it. The name is
+    recorded in ``MEMORY_SINKS`` only once the drain has succeeded;
+    a failed drain drops its view, so it leaves nothing behind.
     """
     spark = stream_df.sparkSession
-    out = _tmpdir("ordspark_stream_fsink_")
-    ckpt = _tmpdir("ordspark_stream_fsink_ckpt_")
-    schema = stream_df.schema
-    tasks = int(os.environ.get("SPARK_GRAFT_STREAM_SINK_TASKS", "0"))
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if tasks > 0:
-            batch_df = batch_df.coalesce(tasks)
-        batch_df.write.mode("append").parquet(out)
-
-    q = (stream_df.writeStream.foreachBatch(write_batch)
-         .option("checkpointLocation", ckpt)
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
-    if not any(f.endswith(".parquet") for f in os.listdir(out)):
-        # zero batches emitted rows: no part files to read — return
-        # an empty frame of the right schema instead of a scan error
-        return spark.createDataFrame([], schema)
-    return spark.read.schema(schema).parquet(out)
+    name = "s" + uuid.uuid4().hex[:12]
+    q = (stream_df.writeStream.format("memory").queryName(name)
+         .outputMode(mode).trigger(availableNow=True).start())
+    try:
+        q.awaitTermination()
+    except StreamingQueryException:
+        spark.catalog.dropTempView(name)
+        raise
+    MEMORY_SINKS.add(name)
+    return spark.table(name)
 
 
 @register(
@@ -384,11 +334,12 @@ def dedup_ttl_updates(stream: DataFrame, evictions=None,
     conversions on every state load AND commit of every group in
     every batch — the +2–3 s the round-13 drain ladder attributed to
     state (de)serialization. Packed bytes cross the boundary as one
-    buffer. Measured on the salted drain (scripts/probe_r14_state.py,
-    interleaved med-of-3): wall 14.30 → 13.13 s, cumulative
-    stateOperators commitTimeMs 31 575 → 17 815 (−44%), output rows
-    identical. The set semantics are unchanged — int64 round-trips
-    through the blob exactly."""
+    buffer. Measured on the salted drain (OPTIMIZATION_r14.md,
+    "fixed-width state encoding"; interleaved med-of-3): wall
+    14.30 → 13.13 s, cumulative stateOperators commitTimeMs
+    31 575 → 17 815 (−44%), output rows identical. The set
+    semantics are unchanged — int64 round-trips through the blob
+    exactly."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout

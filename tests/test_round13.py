@@ -11,12 +11,16 @@
    recorded, output == oracle == unsalted == always-salted), and
    in-TTL different-ts replays are suppressed under the adaptive
    partial salt exactly as under both fixed forms.
+3. connected_components' checkpoint kind follows the session's
+   master, and a memory-sink drain that fails leaves no sink name
+   or view behind.
 """
 
 from __future__ import annotations
 
 import datetime as dt
 
+import pytest
 from pyspark.sql import functions as F
 
 from open_reaction_database_web_scraper_spark.registry import (
@@ -153,38 +157,6 @@ def test_dedup_adaptive_suppresses_in_ttl_replays(spark, tmp_path):
         assert emitted[eid] == first[eid]
 
 
-# ------------------- cluster execution profile ----------------------
-
-def test_cluster_profile_ivf_identical_and_fewer_shuffles(
-        spark, sf_dir, monkeypatch):
-    """SPARK_GRAFT_PROFILE=cluster flips IVF cell assignment to the
-    map-side literal-codebook argmin (the round-7 A/B's cluster
-    branch, BASELINE.md). Pins: (a) the output is BIT-identical to
-    the default path (same dot fold over the same 6-dp centroid
-    doubles, same tie order), and (b) the cluster plan genuinely
-    removes the assignment exchanges — strictly fewer shuffle rows
-    for the same query on the same data (machine-independent shape
-    assertion, the tests/test_plans.py idiom)."""
-    from open_reaction_database_web_scraper_spark.shuffle_metrics \
-        import measure_shuffle
-
-    monkeypatch.delenv("SPARK_GRAFT_PROFILE", raising=False)
-    default = sorted(map(tuple,
-                         run("vector_ann_ivf", spark, sf_dir).collect()))
-    sh_default = measure_shuffle(
-        spark, lambda: run("vector_ann_ivf", spark, sf_dir)
-        .write.format("noop").mode("overwrite").save())
-    monkeypatch.setenv("SPARK_GRAFT_PROFILE", "cluster")
-    clustered = sorted(map(tuple,
-                           run("vector_ann_ivf", spark, sf_dir)
-                           .collect()))
-    sh_cluster = measure_shuffle(
-        spark, lambda: run("vector_ann_ivf", spark, sf_dir)
-        .write.format("noop").mode("overwrite").save())
-    assert clustered == default
-    assert sh_cluster["rows"] < sh_default["rows"]
-
-
 def test_drop_drained_memory_sinks_frees_sink_tables(spark, sf_dir):
     """Each _run_to_memory call registers an s<12-hex> temp view whose
     memory sink keeps the drained rows on the driver heap for the
@@ -213,14 +185,47 @@ def test_drop_drained_memory_sinks_frees_sink_tables(spark, sf_dir):
     spark.catalog.dropTempView("keep_me_not_a_sink")
 
 
-def test_cluster_profile_cc_reliable_checkpoint(spark, tmp_path,
-                                                monkeypatch):
-    """SPARK_GRAFT_PROFILE=cluster flips connected_components to a
-    reliable checkpoint() (dedup.py: a localCheckpoint dies with its
-    executor; later CC rounds become unrecoverable on a real
-    cluster). Pins: mode recorded per profile, identical labels, and
-    actual rdd-* checkpoint data written under the configured
-    directory."""
+def test_failed_drain_leaves_no_memory_sink(spark, tmp_path):
+    """A drain that raises records no name in jobs.MEMORY_SINKS and
+    leaves no sink view behind: the name is recorded only after the
+    stream terminates cleanly, and a failed drain drops its view."""
+    from open_reaction_database_web_scraper_spark.testing import (
+        _SINK_NAME_RE)
+
+    src = str(tmp_path / "src")
+    spark.range(3).write.parquet(src)
+    bad = (spark.readStream.schema("id long").parquet(src)
+           .select(F.raise_error(F.lit("planted drain failure"))
+                   .alias("x")))
+
+    def sink_views():
+        return {t.name for t in spark.catalog.listTables()
+                if _SINK_NAME_RE.fullmatch(t.name)}
+
+    names, views = set(jobs.MEMORY_SINKS), sink_views()
+    with pytest.raises(Exception, match="planted drain failure"):
+        jobs._run_to_memory(bad, "append")
+    assert jobs.MEMORY_SINKS == names
+    assert sink_views() == views
+
+
+def test_master_classification():
+    """Only local and local[...] count as local masters: local-cluster
+    and standalone masters run executors in their own JVMs."""
+    from open_reaction_database_web_scraper_spark.operators import dedup
+
+    for m in ("local", "local[4]", "local[*,4]"):
+        assert dedup._is_local_master(m), m
+    for m in ("local-cluster[2,1,1024]", "spark://h:7077"):
+        assert not dedup._is_local_master(m), m
+
+
+def test_cc_checkpoint_kind_follows_master(spark, tmp_path, monkeypatch):
+    """connected_components uses localCheckpoint on the local test
+    session and a reliable checkpoint() into the SparkContext's
+    checkpoint dir on any other master (a localCheckpoint dies with
+    its executor there). Pins: mode recorded per master, identical
+    labels, and exactly one rdd-* directory left on disk."""
     import os as _os
 
     from open_reaction_database_web_scraper_spark.operators import dedup
@@ -228,23 +233,18 @@ def test_cluster_profile_cc_reliable_checkpoint(spark, tmp_path,
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (10, 11), (20, 20)],
         "src long, dst long")
-    monkeypatch.delenv("SPARK_GRAFT_PROFILE", raising=False)
     local = sorted(map(tuple,
                        dedup.connected_components(edges).collect()))
     assert dedup.LAST_CC_CHECKPOINT_MODE == "local"
-    monkeypatch.setenv("SPARK_GRAFT_CHECKPOINT_DIR",
-                       str(tmp_path / "ckpt"))
-    monkeypatch.setenv("SPARK_GRAFT_PROFILE", "cluster")
-    clustered = sorted(map(tuple,
-                           dedup.connected_components(edges).collect()))
+    ckpt = tmp_path / "ckpt"
+    spark.sparkContext.setCheckpointDir(str(ckpt))
+    monkeypatch.setattr(dedup, "_is_local_master", lambda master: False)
+    reliable = sorted(map(tuple,
+                          dedup.connected_components(edges).collect()))
     assert dedup.LAST_CC_CHECKPOINT_MODE == "reliable"
-    assert clustered == local
-    d = spark.sparkContext.getCheckpointDir()
-    assert d
-    local_d = d.removeprefix("file:")
-    rdd_dirs = [name for _, dirs, _ in _os.walk(local_d)
+    assert reliable == local
+    rdd_dirs = [name for _, dirs, _ in _os.walk(ckpt)
                 for name in dirs if name.startswith("rdd-")]
-    assert rdd_dirs, f"no reliable checkpoint data under {d}"
     # bounded, not O(rounds): each round deletes the previous round's
     # directory once the new checkpoint is materialized (a CC call
     # over a diameter-3 chain runs ~4 rounds; without cleanup the

@@ -1,13 +1,11 @@
 """Round-14 (optimization round 2) pins.
 
 Each test pins one of this round's optimization seams:
-- the cluster-profile streaming drain (file sink instead of the
-  driver-collecting memory sink) is output-identical to the default
-  path and genuinely file-backed;
-- the default (local) drain is byte-identical to round 13 — still a
-  memory-sink temp view;
 - shuffle_metrics' retry-visibility field exists and reads 0 on a
-  healthy run.
+  healthy run;
+- graph_triangle_count's two intersection forms agree;
+- the memory-sink cleanup drops only the drain's own views;
+- connected_components' convergence sum rides the checkpoint action.
 """
 
 from __future__ import annotations
@@ -22,65 +20,6 @@ load_all_operators()
 
 def run(name, spark, sf_dir):
     return REGISTRY[name].fn(spark, sf_dir)
-
-
-def test_cluster_profile_stream_drain_identical_and_file_backed(
-        spark, sf_dir, monkeypatch):
-    """SPARK_GRAFT_PROFILE=cluster drains APPEND-mode streams through
-    the executor-parallel file sink (guide §5: the driver does no
-    data work — the memory sink collects every micro-batch's output
-    to the driver, an OOM at the 100 TB target). Pins: (a) output
-    rows identical to the default memory-sink path on both a built-in
-    stateful aggregation (watermarked windows) and the
-    applyInPandasWithState TTL dedup; (b) the cluster drain is
-    genuinely FILE-backed (inputFiles non-empty) while the default
-    drain stays a memory-sink view (no input files)."""
-    for name in ("stream_watermark_late", "stream_dedup_ttl"):
-        monkeypatch.delenv("SPARK_GRAFT_PROFILE", raising=False)
-        default_df = run(name, spark, sf_dir)
-        default = sorted(map(tuple, default_df.collect()))
-        assert not default_df.inputFiles()  # memory sink: no files
-        monkeypatch.setenv("SPARK_GRAFT_PROFILE", "cluster")
-        clustered_df = run(name, spark, sf_dir)
-        clustered = sorted(map(tuple, clustered_df.collect()))
-        assert clustered_df.inputFiles(), name  # parquet-backed
-        assert clustered == default, name
-    monkeypatch.delenv("SPARK_GRAFT_PROFILE", raising=False)
-
-
-def test_cluster_profile_stream_drain_respects_sink_tasks(
-        spark, sf_dir, monkeypatch):
-    """SPARK_GRAFT_STREAM_SINK_TASKS=1 coalesces each micro-batch's
-    write to one task (the guide-§6 small-output lever): the drain
-    then holds at most one part file per batch, and the rows are
-    still identical to the default path."""
-    monkeypatch.delenv("SPARK_GRAFT_PROFILE", raising=False)
-    default = sorted(map(tuple,
-                         run("stream_watermark_late", spark,
-                             sf_dir).collect()))
-    monkeypatch.setenv("SPARK_GRAFT_PROFILE", "cluster")
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_SINK_TASKS", "1")
-    df = run("stream_watermark_late", spark, sf_dir)
-    # ≤ one part file per micro-batch: 4 data batches + the trailing
-    # no-data batch availableNow emits to finalize watermark state
-    # (its coalesce(1) write still creates one empty part file)
-    files = df.inputFiles()
-    assert files and len(files) <= 5
-    assert sorted(map(tuple, df.collect())) == default
-
-
-def test_update_mode_drain_stays_memory_sink_under_cluster_profile(
-        spark, sf_dir, monkeypatch):
-    """Complete/update-mode drains keep the memory sink in BOTH
-    profiles (the file sink cannot express them; their outputs are
-    bounded aggregate deltas) — and the output is unchanged."""
-    monkeypatch.delenv("SPARK_GRAFT_PROFILE", raising=False)
-    default = sorted(map(tuple,
-                         run("stream_custom_stateful", spark,
-                             sf_dir).collect()))
-    monkeypatch.setenv("SPARK_GRAFT_PROFILE", "cluster")
-    df = run("stream_custom_stateful", spark, sf_dir)
-    assert sorted(map(tuple, df.collect())) == default
 
 
 def test_shuffle_measure_reports_retry_visibility(spark, sf_dir):

@@ -308,6 +308,11 @@ def main() -> None:
         "spread": spread,
         "shuffle": shuffle,
         "sf": sf_of(sf_dir),
+        # the width every query above ran at, and the cores it was
+        # sized from (session.shuffle_width)
+        "cpus": spark.sparkContext.defaultParallelism,
+        "shuffle_partitions": int(
+            spark.conf.get("spark.sql.shuffle.partitions")),
         "loadavg_1m": {"launch": load_launch, "start": load_start},
     }
     # The full per-query map (~90 entries) exceeds the 2,000-char

@@ -1,9 +1,8 @@
 """SparkSession factory tuned for the engine.
 
 Defaults follow SURVEY.md §4: AQE on, Arrow on for pandas UDFs,
-shuffle partitions sized for the target data (32 matches the
-local[32] harness; on a real cluster this is overridden or left to
-AQE coalescing). Session timezone pinned to UTC so timestamp
+shuffle partitions sized to the session's cores (see
+``shuffle_width``). Session timezone pinned to UTC so timestamp
 semantics are deterministic and match the DuckDB oracle's naive
 timestamps.
 """
@@ -11,8 +10,11 @@ timestamps.
 from __future__ import annotations
 
 import os
+from collections.abc import Mapping
 
 from pyspark.sql import SparkSession
+
+SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
 
 DEFAULT_CONFS: dict[str, str] = {
     # Adaptive execution: runtime re-plan, skew-join splitting,
@@ -24,10 +26,6 @@ DEFAULT_CONFS: dict[str, str] = {
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     # Deterministic timestamp semantics (oracle parity).
     "spark.sql.session.timeZone": "UTC",
-    # Shuffle parallelism: one partition per core locally. At
-    # cluster scale, AQE coalesces from a deliberately high initial
-    # number instead; callers override via SPARK_GRAFT_SHUFFLE.
-    "spark.sql.shuffle.partitions": os.environ.get("SPARK_GRAFT_SHUFFLE", "32"),
     "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
     "spark.ui.enabled": "false",
     # Console progress bars write \r-frames to stdout mid-job; any
@@ -43,6 +41,25 @@ DEFAULT_CONFS: dict[str, str] = {
 }
 
 
+def shuffle_width(extra_conf: Mapping[str, str] | None,
+                  env: Mapping[str, str], current: str | None,
+                  cores: int) -> str:
+    """The ``spark.sql.shuffle.partitions`` a session runs at.
+
+    An explicit width wins, in this order: ``extra_conf``, then
+    ``SPARK_GRAFT_SHUFFLE``, then a width already set on the session
+    (``current``; ``getOrCreate`` may return an existing one).
+    Otherwise one partition per core: ``cores`` is
+    ``defaultParallelism`` (N on ``local[N]``, the registered executor
+    cores on a cluster). AQE only coalesces batch shuffles down, and
+    a stateful stream fixes its state-store width from this conf at
+    its first start, so a width above the core count is paid on
+    every micro-batch.
+    """
+    return ((extra_conf or {}).get(SHUFFLE_PARTITIONS)
+            or env.get("SPARK_GRAFT_SHUFFLE") or current or str(cores))
+
+
 def get_session(app_name: str = "ord-spark-engine", master: str | None = None,
                 extra_conf: dict[str, str] | None = None) -> SparkSession:
     """Build (or fetch) the engine SparkSession."""
@@ -51,4 +68,8 @@ def get_session(app_name: str = "ord-spark-engine", master: str | None = None,
         master or f"local[{cpus}]")
     for k, v in {**DEFAULT_CONFS, **(extra_conf or {})}.items():
         builder = builder.config(k, v)
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    spark.conf.set(SHUFFLE_PARTITIONS, shuffle_width(
+        extra_conf, os.environ, spark.conf.get(SHUFFLE_PARTITIONS, None),
+        spark.sparkContext.defaultParallelism))
+    return spark

@@ -2,16 +2,16 @@
 
 Usage: python scripts/determinism_check.py [sf_dir] [out.json] [name ...]
 
-Runs every registered query twice — once at the session's default
-shuffle parallelism (32) and once at a deliberately different,
-co-prime width (7) — and compares an order-insensitive value hash of
-the two results. On a real cluster the partition count is an
-operational knob (AQE, executor loss, config drift), so any query
-whose OUTPUT depends on it would flap a diff-based regression gate
-at 100 TB even though every small-scale test stays green. This is
-the check the differential oracle cannot do: Spark and DuckDB can
-agree at one parallelism while Spark disagrees with itself at
-another.
+Runs every registered query twice — once at the session's shuffle
+width (by default its core count) and once at a deliberately
+different width (7, or 5 when the base is 7) — and compares an
+order-insensitive value hash of the two results. On a real cluster
+the partition count is an operational knob (AQE, executor loss,
+config drift), so any query whose OUTPUT depends on it would flap a
+diff-based regression gate at 100 TB even though every small-scale
+test stays green. This is the check the differential oracle cannot
+do: Spark and DuckDB can agree at one parallelism while Spark
+disagrees with itself at another.
 
 Shapes this catches: floating-point aggregation order (the decimal-
 accumulator idiom exists to prevent it), first/last or min_by/max_by
@@ -52,7 +52,12 @@ from open_reaction_database_web_scraper_spark.session import get_session  # noqa
 from open_reaction_database_web_scraper_spark.testing import (  # noqa: E402
     drop_drained_memory_sinks)
 
-ALT_PARTITIONS = "7"
+
+def alt_width(base: str) -> str:
+    """The second width each query runs at; never equal to the base,
+    or the check would compare a width with itself."""
+    return "5" if base == "7" else "7"
+
 
 # Queries whose OUTPUT may legitimately vary with partition layout,
 # with the reason. Kept EMPTY by policy unless a query's semantics
@@ -125,9 +130,10 @@ def main() -> int:
     spark = get_session("determinism")
     spark.sparkContext.setLogLevel("ERROR")
     base_parts = spark.conf.get("spark.sql.shuffle.partitions")
+    alt_parts = alt_width(base_parts)
     todo = names or sorted(REGISTRY)
     result: dict = {"sf_dir": sf_dir, "base_partitions": base_parts,
-                    "alt_partitions": ALT_PARTITIONS, "queries": {}}
+                    "alt_partitions": alt_parts, "queries": {}}
     n_bad = 0
     for name in todo:
         cap_key = (name, os.path.basename(sf_dir.rstrip("/")))
@@ -142,13 +148,13 @@ def main() -> int:
         try:
             # clear cached subtrees between runs: several operators
             # cache() reused intermediates (minhash signatures, IVF
-            # centroids), and a cached width-32 subtree substituted
-            # into the width-7 plan would vacate the check for
+            # centroids), and a cached base-width subtree substituted
+            # into the alternate-width plan would vacate the check for
             # exactly the stages most worth checking
             spark.conf.set("spark.sql.shuffle.partitions", base_parts)
             spark.catalog.clearCache()
             a = fn(spark, sf_dir).toPandas()
-            spark.conf.set("spark.sql.shuffle.partitions", ALT_PARTITIONS)
+            spark.conf.set("spark.sql.shuffle.partitions", alt_parts)
             spark.catalog.clearCache()
             b = fn(spark, sf_dir).toPandas()
             ha, hb = canon_hash(a), canon_hash(b)

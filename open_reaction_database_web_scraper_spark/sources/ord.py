@@ -6,8 +6,8 @@ This is the reference's semantic core rebuilt Spark-first:
   store the reference emits (web_scrpaer_2.py:530-548) into one row
   per reaction.
 * ``format_reactions`` is the formatter (format_reaction_data,
-  web_scrpaer_2.py:82-192) as a single declarative column
-  expression: enum decode, oneof-amount normalization,
+  web_scrpaer_2.py:82-192) as declarative column expressions over
+  a payload parsed once: enum decode, oneof-amount normalization,
   outcomesList×productsList flattening — no Python in the plan.
 * ``components_flat`` / ``outcomes_flat`` / ``dataset_rollup`` are
   the silver tables (FIXTURES.md A.3).
@@ -20,10 +20,28 @@ JSON reader can't type that directly, so the bronze pass reads each
 pair as ``array<string>`` (the parser stringifies the object) and a
 second ``from_json`` inside a ``transform`` lambda parses the
 payload half — the two-pass parse stays entirely JVM-side.
+
+Each stage's projection lists are built once per JVM and reused by
+every later call. A PySpark ``Column`` is a handle on a JVM object,
+so building one of these trees from Python costs one py4j round-trip
+per node: rebuilding them on every call (the enum map literals, the
+``transform`` lambdas) made the driver, not the executors, the
+bottleneck of a pipeline pass (~7,000 round-trips, against ~600
+with the trees reused). The trees hold no session state (names
+resolve and confs apply when a ``select`` analyzes them), so one
+copy serves every session of the JVM; a new gateway rebuilds them.
+Only whole stage lists are memoized, never a sub-expression nested
+inside another, so one cached lambda variable never appears twice in
+one tree.
 """
 
 from __future__ import annotations
 
+import functools
+from collections.abc import Callable
+from typing import TypeVar
+
+from pyspark import SparkContext
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -77,6 +95,47 @@ RAW_REACTION = ("struct<reactionId: string, "
 
 
 # ---------------------------------------------------------------------------
+# Projection lists, built once per JVM
+
+Projections = tuple[tuple[Column | str, ...], ...]
+_P = TypeVar("_P")
+
+
+def once_per_jvm(build: Callable[..., _P]) -> Callable[..., _P]:
+    """Memoize ``build(*args)`` per py4j JVM (``SparkContext._jvm``).
+
+    The result must be immutable (tuples of Columns): every caller
+    gets the same object. A call under a different JVM than the one
+    the cached Columns live in rebuilds them."""
+    built: dict[tuple, tuple[object, _P]] = {}
+
+    @functools.wraps(build)
+    def cached(*args):
+        jvm = SparkContext._jvm
+        hit = built.get(args)
+        if hit is None or hit[0] is not jvm:
+            hit = built[args] = (jvm, build(*args))
+        return hit[1]
+    return cached
+
+
+def _project(df: DataFrame, projections: Projections) -> DataFrame:
+    for cols in projections:
+        df = df.select(*cols)
+    return df
+
+
+def _posinline_outer(arr: str, pos: str,
+                     fields: Callable[[Column], tuple[Column, ...]]) -> Column:
+    """``posexplode_outer(arr)`` and a projection of each element as one
+    generator, so it needs no ``select`` of its own: one row per
+    element with its ordinal ``pos`` and the named ``fields(element)``;
+    a null or empty array gives one all-null row."""
+    return F.inline_outer(F.transform(
+        arr, lambda x, i: F.struct(i.alias(pos), *fields(x))))
+
+
+# ---------------------------------------------------------------------------
 # Bronze: golden document ingestion
 
 def _pairs_to_map(pairs: Column, payload_schema: str) -> Column:
@@ -96,20 +155,22 @@ def read_ord_documents(spark: SparkSession, path: str) -> DataFrame:
     PERMISSIVE parsing: a malformed file yields a null map (the
     reference's try/except guard, web_scrpaer_2.py:451-456).
     """
-    raw = spark.read.text(path, wholetext=True)
-    docs = raw.select(F.from_json(
-        "value", GOLDEN_DOC, {"mode": "PERMISSIVE"}).alias("doc"))
-    ds = docs.select(F.explode("doc").alias("map_key", "ds"))
-    reactions = ds.select(
-        F.col("ds.dataset_id").alias("dataset_id"),
-        F.col("ds.total_reactions_scraped").alias("total_reactions_scraped"),
-        F.posexplode_outer("ds.reactions").alias("reaction_pos", "r"))
-    return reactions.select(
-        "dataset_id", "total_reactions_scraped", "reaction_pos",
-        F.col("r.reaction_id").alias("reaction_id"),
-        F.col("r.success").alias("success"),
-        _pairs_to_map(F.col("r.inputsMap"), INPUT_F).alias("inputs"),
-        F.col("r.outcomes").alias("outcomes"))
+    return _project(spark.read.text(path, wholetext=True),
+                    _document_projections())
+
+
+@once_per_jvm
+def _document_projections() -> Projections:
+    return (
+        (F.explode(F.from_json("value", GOLDEN_DOC, {"mode": "PERMISSIVE"}))
+         .alias("map_key", "ds"),),
+        (F.col("ds.dataset_id").alias("dataset_id"),
+         F.col("ds.total_reactions_scraped").alias("total_reactions_scraped"),
+         _posinline_outer("ds.reactions", "reaction_pos", lambda r: (
+             r["reaction_id"].alias("reaction_id"),
+             r["success"].alias("success"),
+             _pairs_to_map(r["inputsMap"], INPUT_F).alias("inputs"),
+             r["outcomes"].alias("outcomes")))))
 
 
 # ---------------------------------------------------------------------------
@@ -163,7 +224,8 @@ def _or_empty(col: F.Column, elem_ddl: str) -> F.Column:
 def format_reactions(scraped: DataFrame,
                      data_col: str = "data",
                      success_col: str = "success") -> DataFrame:
-    """The reference formatter as one declarative projection.
+    """The reference formatter as declarative projections: the
+    payload is parsed once, then one projection builds each row.
 
     Input: one row per scrape result with ``data`` a raw JSON string
     (shape RAW_REACTION) and a ``success`` flag — the reference's
@@ -174,7 +236,20 @@ def format_reactions(scraped: DataFrame,
     Output columns: reaction_id, success, inputs map<string,INPUT_F>,
     outcomes array<OUTCOME_F> — the canonical schema §1.3.
     """
-    d = F.from_json(F.col(data_col), RAW_REACTION, {"mode": "PERMISSIVE"})
+    return _project(scraped, _format_projections(data_col, success_col))
+
+
+@once_per_jvm
+def _format_projections(data_col: str, success_col: str) -> Projections:
+    # The payload is parsed once, in its own projection: the optimizer
+    # prunes each ``from_json(...)[field]`` into a parse of its own,
+    # and does not collapse a costly expression into a projection that
+    # references it more than once.
+    parse = (
+        F.from_json(F.col(data_col), RAW_REACTION, {"mode": "PERMISSIVE"})
+        .alias("d"),
+        F.coalesce(F.col(success_col), F.lit(True)).alias("success"))
+    d = F.col("d")
 
     inputs = F.map_from_entries(F.transform(
         d["inputsMap"],
@@ -213,9 +288,9 @@ def format_reactions(scraped: DataFrame,
                                _decode_unit(m["amount"]["mass"], MASS_UNITS))
                         .alias("mass"))).alias("measurements")))))
 
-    return scraped.select(
+    return parse, (
         d["reactionId"].alias("reaction_id"),
-        F.coalesce(F.col(success_col), F.lit(True)).alias("success"),
+        "success",
         F.when(d["inputsMap"].isNotNull(), inputs)
         .otherwise(F.map_from_entries(
             F.array().cast("array<struct<key: string, "
@@ -228,64 +303,67 @@ def format_reactions(scraped: DataFrame,
 
 def components_flat(reactions: DataFrame) -> DataFrame:
     """One row per (input tab, component, identifier)."""
-    tabs = reactions.select(
-        "dataset_id", "reaction_id",
-        F.explode("inputs").alias("tab", "input"))
-    comps = tabs.select(
-        "dataset_id", "reaction_id", "tab",
-        F.posexplode("input.components").alias("component_idx", "c"))
+    return _project(reactions, _component_projections())
+
+
+@once_per_jvm
+def _component_projections() -> Projections:
     amount_kind = (
         F.when(F.col("c.amount.moles").isNotNull(), "moles")
         .when(F.col("c.amount.volume").isNotNull(), "volume")
         .when(F.col("c.amount.mass").isNotNull(), "mass"))
     amount = F.coalesce("c.amount.moles", "c.amount.volume", "c.amount.mass")
-    return comps.select(
-        "dataset_id", "reaction_id", "tab", "component_idx",
-        F.posexplode_outer("c.identifiers").alias("identifier_idx", "ident"),
-        amount_kind.alias("amount_kind"),
-        amount["value"].alias("amount_value"),
-        amount["units"].alias("amount_units"),
-        F.col("c.reaction_role").alias("reaction_role"),
-    ).select(
-        "dataset_id", "reaction_id", "tab", "component_idx",
-        "identifier_idx",
-        F.col("ident.type").alias("id_type"),
-        F.col("ident.value").alias("id_value"),
-        "amount_kind", "amount_value", "amount_units", "reaction_role")
+    return (
+        ("dataset_id", "reaction_id",
+         F.explode("inputs").alias("tab", "input")),
+        ("dataset_id", "reaction_id", "tab",
+         F.posexplode("input.components").alias("component_idx", "c")),
+        ("dataset_id", "reaction_id", "tab", "component_idx",
+         _posinline_outer("c.identifiers", "identifier_idx", _identifier),
+         amount_kind.alias("amount_kind"),
+         amount["value"].alias("amount_value"),
+         amount["units"].alias("amount_units"),
+         F.col("c.reaction_role").alias("reaction_role")))
+
+
+def _identifier(ident: Column) -> tuple[Column, ...]:
+    return ident["type"].alias("id_type"), ident["value"].alias("id_value")
 
 
 def outcomes_flat(reactions: DataFrame) -> DataFrame:
     """One row per (product, identifier), first measurement joined."""
-    prods = reactions.select(
-        "dataset_id", "reaction_id",
-        F.posexplode("outcomes").alias("product_idx", "o"))
+    return _project(reactions, _outcome_projections())
+
+
+@once_per_jvm
+def _outcome_projections() -> Projections:
     # try_element_at: plain element_at on an EMPTY (non-null) array
     # THROWS under Spark 4's default ANSI mode — and the formatter
     # (and the reference, web_scrpaer_2.py product_info) emit
     # "measurements": [] routinely; try_ returns NULL instead.
     meas = F.try_element_at("o.measurements", F.lit(1))
-    return prods.select(
-        "dataset_id", "reaction_id", "product_idx",
-        F.posexplode_outer("o.identifiers").alias("identifier_idx", "ident"),
-        F.col("o.is_desired_product").alias("is_desired_product"),
-        meas["type"].alias("meas_type"),
-        meas["details"].alias("meas_details"),
-        meas["mass"]["value"].alias("meas_mass_value"),
-        meas["mass"]["units"].alias("meas_mass_units"),
-    ).select(
-        "dataset_id", "reaction_id", "product_idx", "identifier_idx",
-        F.col("ident.type").alias("id_type"),
-        F.col("ident.value").alias("id_value"),
-        "is_desired_product", "meas_type", "meas_details",
-        "meas_mass_value", "meas_mass_units")
+    return (
+        ("dataset_id", "reaction_id",
+         F.posexplode("outcomes").alias("product_idx", "o")),
+        ("dataset_id", "reaction_id", "product_idx",
+         _posinline_outer("o.identifiers", "identifier_idx", _identifier),
+         F.col("o.is_desired_product").alias("is_desired_product"),
+         meas["type"].alias("meas_type"),
+         meas["details"].alias("meas_details"),
+         meas["mass"]["value"].alias("meas_mass_value"),
+         meas["mass"]["units"].alias("meas_mass_units")))
 
 
 def dataset_rollup(reactions: DataFrame) -> DataFrame:
     """Per-dataset totals — web_scrpaer_2.py:461-462."""
-    return reactions.groupBy("dataset_id").agg(
-        F.count("reaction_id").alias("total_reactions"),
-        F.sum(F.when(F.col("success"), 1).otherwise(0))
-        .alias("successful_scrapes"))
+    return reactions.groupBy("dataset_id").agg(*_rollup_aggregates())
+
+
+@once_per_jvm
+def _rollup_aggregates() -> tuple[Column, ...]:
+    return (F.count("reaction_id").alias("total_reactions"),
+            F.sum(F.when(F.col("success"), 1).otherwise(0))
+            .alias("successful_scrapes"))
 
 
 # ---------------------------------------------------------------------------
@@ -295,24 +373,23 @@ def renest_documents(reactions: DataFrame) -> DataFrame:
     """Rebuild the per-dataset nested record the reference writes
     (web_scrpaer_2.py:530-543): successful reactions only, reaction
     order preserved via the ingestion ordinal."""
+    return reactions.groupBy("dataset_id").agg(*_renest_aggregates())
+
+
+@once_per_jvm
+def _renest_aggregates() -> tuple[Column, ...]:
     keep = F.col("reaction_id").isNotNull() & F.col("success")
-    per_row = reactions.select(
-        "dataset_id",
-        # collect_list drops nulls → zero-reaction datasets keep an
-        # empty array (reference keeps empty dataset records,
-        # web_scrpaer_2.py:441-442). The null must wrap the OUTER
-        # struct, not a field of it.
-        F.when(keep, F.struct(
-            "reaction_pos",
-            F.struct(
-                "reaction_id", "success",
-                F.map_entries("inputs").alias("inputsMap"),
-                "outcomes").alias("reaction"))).alias("pr"))
-    return (per_row.groupBy("dataset_id")
-            .agg(F.transform(
-                F.array_sort(F.collect_list("pr")),
-                lambda s: s["reaction"]).alias("reactions"))
-            .select("dataset_id",
-                    F.size("reactions").cast("long")
-                    .alias("total_reactions_scraped"),
-                    "reactions"))
+    # collect_list drops nulls → zero-reaction datasets keep an empty
+    # array (reference keeps empty dataset records,
+    # web_scrpaer_2.py:441-442). The null must wrap the OUTER struct,
+    # not a field of it. The two collect_list calls are one aggregate
+    # (the planner merges equal aggregate expressions).
+    positioned = F.collect_list(F.when(keep, F.struct(
+        "reaction_pos",
+        F.struct(
+            "reaction_id", "success",
+            F.map_entries("inputs").alias("inputsMap"),
+            "outcomes").alias("reaction"))))
+    return (F.size(positioned).cast("long").alias("total_reactions_scraped"),
+            F.transform(F.array_sort(positioned),
+                        lambda s: s["reaction"]).alias("reactions"))

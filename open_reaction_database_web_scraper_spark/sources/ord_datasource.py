@@ -313,8 +313,11 @@ class OrdSinkWriter(DataSourceWriter):
         n = 0
         with open(tmp, "w", encoding="utf-8") as f:
             for row in iterator:
-                f.write(json.dumps(row.asDict(), sort_keys=True,
-                                   default=str) + "\n")
+                # recursive: a nested struct arrives as a Row (a
+                # tuple), which json.dumps would write as a
+                # positional array, dropping its field names
+                f.write(json.dumps(row.asDict(recursive=True),
+                                   sort_keys=True, default=str) + "\n")
                 n += 1
         if n == 0:  # no empty shards: drop the file, commit nothing
             os.remove(tmp)

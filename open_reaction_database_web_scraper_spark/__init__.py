@@ -10,6 +10,9 @@ registered in :mod:`.registry` and exposed through
 ``__spark_entry__.py`` for the driver's differential-oracle gate.
 """
 
+# first: every worker that unpickles this package's code stops
+# re-reading pyspark.zip on each call (see zipcache.py)
+from . import zipcache  # noqa: F401  isort: skip
 from .catalog import load, load_all, register_views  # noqa: F401
 from .plans.crawl_plan import (  # noqa: F401
     CrawlPlan,

@@ -23,17 +23,33 @@ from __future__ import annotations
 
 import glob
 import json
-from collections.abc import Iterator, Sequence
+from collections.abc import Callable, Iterator, Sequence
+from typing import Any
 
+from pyspark.sql.conversion import ArrowTableToRowsConversion
 from pyspark.sql.datasource import (
     DataSource,
+    DataSourceArrowWriter,
     DataSourceReader,
     EqualTo,
     Filter,
-    DataSourceWriter,
     InputPartition,
     SimpleDataSourceStreamReader,
     WriterCommitMessage,
+)
+from pyspark.sql.types import (
+    ArrayType,
+    BooleanType,
+    ByteType,
+    DataType,
+    DoubleType,
+    FloatType,
+    IntegerType,
+    LongType,
+    MapType,
+    ShortType,
+    StringType,
+    StructType,
 )
 
 ORD_FLAT_SCHEMA = ("dataset_id string, total_reactions_scraped bigint, "
@@ -276,7 +292,87 @@ class OrdShardCommit(WriterCommitMessage):
         self.n_rows = n_rows
 
 
-class OrdSinkWriter(DataSourceWriter):
+_NUMERIC = (BooleanType, ByteType, ShortType, IntegerType, LongType,
+            FloatType, DoubleType)
+
+
+def _masked(arr, values: list) -> list:
+    """``values`` with None where ``arr`` is null."""
+    if not arr.null_count:
+        return values
+    valid = arr.is_valid().to_numpy(zero_copy_only=False).tolist()
+    return [v if ok else None for v, ok in zip(values, valid)]
+
+
+def _segments(arr) -> tuple:
+    """A list or map array's own slice of its child values, and its
+    offsets rebased onto that slice."""
+    if not len(arr):  # Spark sends an empty one with no offsets buffer
+        return arr.values.slice(0, 0), [0]
+    off = arr.offsets.to_numpy()
+    return (arr.values.slice(off[0], off[-1] - off[0]),
+            (off - off[0]).tolist())
+
+
+def _dicts(names: list[str], convs: list, arrays: list, n: int) -> list:
+    """One dict per row of ``n``, from the arrays of a batch's columns
+    or a struct's fields and their ``_values`` functions."""
+    cols = [c(a) for c, a in zip(convs, arrays)]
+    if not cols:
+        return [{} for _ in range(n)]
+    return [dict(zip(names, v)) for v in zip(*cols)]
+
+
+def _values(dt: DataType) -> Callable[[Any], list]:
+    """The function from an Arrow array of Spark type ``dt`` to the
+    Python values ``Row.asDict(recursive=True)`` holds for it: structs
+    become dicts keyed by field name (a repeated name keeps its last
+    value, as in ``asDict``), maps become dicts. Nested arrays are
+    converted a child column at a time (values, offsets, validity),
+    Dremel-style, not one ``as_py`` scalar at a time as ``to_pylist``
+    does, which is ~3x slower on the renested ORD documents. Other
+    leaves (timestamps, binary, decimals, dates, UDTs) go through
+    ``to_pylist`` and pyspark's own Arrow-to-Row converter, so they
+    render as they did on the row path."""
+    if isinstance(dt, StructType):
+        names, convs = dt.names, [_values(f.dataType) for f in dt.fields]
+        return lambda arr: _masked(
+            arr, _dicts(names, convs, arr.flatten(), len(arr)))
+    if isinstance(dt, ArrayType):
+        conv = _values(dt.elementType)
+
+        def array(arr) -> list:
+            values, off = _segments(arr)
+            items = conv(values)
+            return _masked(arr, [items[a:b] for a, b in zip(off, off[1:])])
+        return array
+    if isinstance(dt, MapType):
+        convs = (_values(dt.keyType), _values(dt.valueType))
+
+        def map_(arr) -> list:
+            entries, off = _segments(arr)
+            keys, items = (c(a) for c, a in zip(convs, entries.flatten()))
+            return _masked(arr, [dict(zip(keys[a:b], items[a:b]))
+                                 for a, b in zip(off, off[1:])])
+        return map_
+    if isinstance(dt, _NUMERIC):
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        # numpy has no null: fill, convert, then mask
+        return lambda arr: _masked(arr, pc.fill_null(
+            arr, pa.scalar(False).cast(arr.type))
+            .to_numpy(zero_copy_only=False).tolist())
+    if isinstance(dt, StringType):
+        return lambda arr: arr.to_numpy(zero_copy_only=False).tolist()
+    leaf = ArrowTableToRowsConversion._create_converter(
+        dt, none_on_identity=True, binary_as_bytes=True)
+    if leaf is None:
+        return lambda arr: arr.to_pylist()
+    return lambda arr: [leaf(v) for v in arr.to_pylist()]
+
+
+class OrdSinkWriter(DataSourceArrowWriter):
     """Transactional JSONL sink: each task streams its partition to
     a TEMP shard and reports it in a commit message; only the driver
     ``commit`` renames shards to their final names and writes the
@@ -299,26 +395,32 @@ class OrdSinkWriter(DataSourceWriter):
     orphan shards may exist but are invisible to any reader that
     honors the manifest, preserving the all-or-nothing claim."""
 
-    def __init__(self, options: dict, overwrite: bool = True):
+    def __init__(self, options: dict, overwrite: bool = True,
+                 schema: StructType | None = None):
+        # schema: the frame's, which write() needs; commit and abort
+        # run without it
         self.path = options.get("path")
         self.overwrite = overwrite
+        self.schema = schema
         if not self.path:
             raise ValueError("ord_sink requires a 'path' option")
 
     def write(self, iterator) -> OrdShardCommit:
+        """Each row of each Arrow batch becomes one JSON object line,
+        nested structs keeping their field names."""
         import os
         import uuid
+        names = self.schema.names
+        convs = [_values(f.dataType) for f in self.schema.fields]
         os.makedirs(self.path, exist_ok=True)
         tmp = os.path.join(self.path, f"_tmp-{uuid.uuid4().hex}.jsonl")
         n = 0
         with open(tmp, "w", encoding="utf-8") as f:
-            for row in iterator:
-                # recursive: a nested struct arrives as a Row (a
-                # tuple), which json.dumps would write as a
-                # positional array, dropping its field names
-                f.write(json.dumps(row.asDict(recursive=True),
-                                   sort_keys=True, default=str) + "\n")
-                n += 1
+            for batch in iterator:
+                rows = _dicts(names, convs, batch.columns, batch.num_rows)
+                f.writelines(json.dumps(r, sort_keys=True, default=str)
+                             + "\n" for r in rows)
+                n += len(rows)
         if n == 0:  # no empty shards: drop the file, commit nothing
             os.remove(tmp)
             return OrdShardCommit(None, 0)
@@ -544,4 +646,4 @@ class OrdSinkDataSource(DataSource):
         return "ord_sink"
 
     def writer(self, schema, overwrite: bool) -> OrdSinkWriter:
-        return OrdSinkWriter(self.options, overwrite)
+        return OrdSinkWriter(self.options, overwrite, schema)

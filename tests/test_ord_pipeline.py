@@ -122,3 +122,50 @@ def test_ord_sink_keeps_nested_field_names(spark, tmp_path):
     assert json.loads(line) == {
         "id": 1, "s": {"a": 2, "b": {"c": "z"}},
         "arr": [{"x": 3}, {"x": 4}], "m": {"k": {"y": 0.5}}}
+
+
+def _sink_lines(df, out: str) -> list[str]:
+    df.write.format("ord_sink").option("path", out) \
+        .mode("overwrite").save()
+    with open(os.path.join(out, "_MANIFEST.json"), encoding="utf-8") as f:
+        shards = json.load(f)["shards"]
+    lines = []
+    for shard in shards:
+        with open(os.path.join(out, shard), encoding="utf-8") as f:
+            lines += f.read().splitlines()
+    return sorted(lines)
+
+
+def test_ord_sink_lines_match_row_encoding(spark, ord_corpus, tmp_path):
+    """Each shard line is ``json.dumps(row.asDict(recursive=True),
+    sort_keys=True, default=str)``, the encoding of the per-row
+    writer, here computed on the driver over the collected rows."""
+    import datetime
+    import decimal
+
+    spark.dataSource.register(OrdSinkDataSource)
+    schema = ("id long, ts timestamp, d date, dec decimal(10,3), "
+              "bin binary, n string, f double, em map<string, int>, "
+              "ms map<string, struct<y: double, t: timestamp>>, "
+              "arr array<struct<x: int, b: boolean>>, "
+              "aa array<array<long>>, mb map<int, boolean>")
+    rows = [
+        (1, datetime.datetime(2024, 1, 2, 3, 4, 5, 6),
+         datetime.date(2024, 2, 29), decimal.Decimal("1.250"), b"\x00ab",
+         None, float("nan"), {}, {"k": (0.5, datetime.datetime(2020, 1, 1))},
+         [(3, None), None], [[2**62, None], None, []], {7: None}),
+        (2, None, None, None, None, "s\u00e9", None, None, {"k": None},
+         [], None, {1: True, 2: False}),
+        (3, None, None, None, None, None, -0.0, {"z": None}, None,
+         [(None, True)], [[1], [2, 3]], None)]
+    # one row per task: a batch whose nested arrays are all empty or
+    # null arrives with no offsets buffer for them
+    tricky = spark.createDataFrame(
+        spark.sparkContext.parallelize(rows, len(rows)), schema)
+    _, store, _ = ord_corpus
+    docs = ord_src.renest_documents(ord_src.read_ord_documents(spark, store))
+    for name, df in [("tricky", tricky), ("docs", docs)]:
+        expected = sorted(
+            json.dumps(r.asDict(recursive=True), sort_keys=True, default=str)
+            for r in df.collect())
+        assert _sink_lines(df, str(tmp_path / name)) == expected

@@ -38,6 +38,18 @@ DEFAULT_CONFS: dict[str, str] = {
     # pushFilters(); Spark 4.1 refuses to plan such a reader unless
     # Python-source filter pushdown is explicitly enabled.
     "spark.sql.python.filterPushdown.enabled": "true",
+    # Checkpoint through FileSystem.rename, not FileContext. Without
+    # the native Hadoop library, FileContext's rename stats each path
+    # by spawning `readlink` (RawLocalFileSystem's link-status check):
+    # one EWMA drain, one micro-batch at width 4, spawned 155
+    # processes, 112 of them `readlink`, for its offset, commit and
+    # state-delta renames; with this manager 43, none `readlink`.
+    # File.renameTo is atomic on POSIX and FileSystem.rename on HDFS,
+    # and Spark already uses this manager for any scheme without a
+    # FileContext binding.
+    "spark.sql.streaming.checkpointFileManagerClass":
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileSystemBasedCheckpointFileManager",
 }
 
 

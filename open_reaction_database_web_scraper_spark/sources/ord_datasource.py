@@ -21,6 +21,7 @@ value-checked against the same DuckDB oracle as the relational scan.
 
 from __future__ import annotations
 
+import base64
 import glob
 import json
 from collections.abc import Callable, Iterator, Sequence
@@ -39,6 +40,7 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import (
     ArrayType,
+    BinaryType,
     BooleanType,
     ByteType,
     DataType,
@@ -330,10 +332,12 @@ def _values(dt: DataType) -> Callable[[Any], list]:
     value, as in ``asDict``), maps become dicts. Nested arrays are
     converted a child column at a time (values, offsets, validity),
     Dremel-style, not one ``as_py`` scalar at a time as ``to_pylist``
-    does, which is ~3x slower on the renested ORD documents. Other
-    leaves (timestamps, binary, decimals, dates, UDTs) go through
-    ``to_pylist`` and pyspark's own Arrow-to-Row converter, so they
-    render as they did on the row path."""
+    does, which is ~3x slower on the renested ORD documents. Binary
+    becomes base64 text, as Spark's JSON writer renders it, not the
+    ``bytes`` repr no JSON reader decodes. Other leaves (timestamps,
+    decimals, dates, UDTs) go through ``to_pylist`` and pyspark's own
+    Arrow-to-Row converter, so they render as they did on the row
+    path."""
     if isinstance(dt, StructType):
         names, convs = dt.names, [_values(f.dataType) for f in dt.fields]
         return lambda arr: _masked(
@@ -365,6 +369,10 @@ def _values(dt: DataType) -> Callable[[Any], list]:
             .to_numpy(zero_copy_only=False).tolist())
     if isinstance(dt, StringType):
         return lambda arr: arr.to_numpy(zero_copy_only=False).tolist()
+    if isinstance(dt, BinaryType):
+        return lambda arr: [None if v is None
+                            else base64.b64encode(v).decode("ascii")
+                            for v in arr.to_pylist()]
     leaf = ArrowTableToRowsConversion._create_converter(
         dt, none_on_identity=True, binary_as_bytes=True)
     if leaf is None:

@@ -7,6 +7,7 @@ no reference files needed).
 
 from __future__ import annotations
 
+import base64
 import json
 import os
 
@@ -136,10 +137,19 @@ def _sink_lines(df, out: str) -> list[str]:
     return sorted(lines)
 
 
+def _row_default(v):
+    """The per-row writer's ``default=str``, but binary as base64."""
+    if isinstance(v, bytes):
+        return base64.b64encode(v).decode("ascii")
+    return str(v)
+
+
 def test_ord_sink_lines_match_row_encoding(spark, ord_corpus, tmp_path):
     """Each shard line is ``json.dumps(row.asDict(recursive=True),
     sort_keys=True, default=str)``, the encoding of the per-row
-    writer, here computed on the driver over the collected rows."""
+    writer, here computed on the driver over the collected rows;
+    binary is base64, as Spark's JSON writer renders it, so Spark's
+    JSON reader decodes it back."""
     import datetime
     import decimal
 
@@ -166,6 +176,13 @@ def test_ord_sink_lines_match_row_encoding(spark, ord_corpus, tmp_path):
     docs = ord_src.renest_documents(ord_src.read_ord_documents(spark, store))
     for name, df in [("tricky", tricky), ("docs", docs)]:
         expected = sorted(
-            json.dumps(r.asDict(recursive=True), sort_keys=True, default=str)
+            json.dumps(r.asDict(recursive=True), sort_keys=True,
+                       default=_row_default)
             for r in df.collect())
         assert _sink_lines(df, str(tmp_path / name)) == expected
+    assert tricky.select(F.to_json(F.struct("bin"))).first()[0] \
+        == '{"bin":"AGFi"}'
+    back = spark.read.schema("id long, bin binary").json(
+        str(tmp_path / "tricky" / "part-*"))
+    assert {r.id: r.bin for r in back.collect()} == {
+        1: b"\x00ab", 2: None, 3: None}

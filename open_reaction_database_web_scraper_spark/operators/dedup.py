@@ -344,7 +344,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 #     None (the registered-query default, which is LOSSLESS).
 #   LAST_CC_ROUNDS — rounds taken by the most recent
 #     connected_components call (≈ graph diameter; grows with chain
-#     length, not corpus size). Read by scripts/scaleup_r6.py etc.
+#     length, not corpus size). Read by scripts/scale_corpus.py.
 _DIAG = threading.local()
 
 

@@ -38,11 +38,12 @@ output is independent of the machine shape it ran on.
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 import traceback
 
-sys.path.insert(0, ".")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import pandas as pd  # noqa: E402
 

@@ -8,11 +8,12 @@ executed (rows>=0, stable schema).
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 import traceback
 
-sys.path.insert(0, ".")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from open_reaction_database_web_scraper_spark.registry import (  # noqa: E402
     REGISTRY, load_all_operators)

@@ -13,9 +13,10 @@ Red flags scanned (the shapes that break at 100 TB):
 from __future__ import annotations
 
 import re
+import os
 import sys
 
-sys.path.insert(0, ".")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from open_reaction_database_web_scraper_spark.registry import (  # noqa: E402
     REGISTRY, load_all_operators)

@@ -378,13 +378,13 @@ def test_round_half_up_cents_matches_spark_and_duckdb(spark):
     assert ours == spark_cents == duck_cents
 
 
-def test_hot_cap_pair_recall_floor(spark, tmp_path):
+def test_hot_cap_pair_recall_floor(spark, sf_dir, tmp_path):
     """VERDICT r11 #2: the hot_cap second line of defense is
     recall-LOSING by design (it drops over-occupied band buckets);
     this pins the loss as a MEASURED floor, like vector_ann_lsh's
     recall-floor test. Corpus model = the densifying salt-interleave
     decade the cap exists for (10x of sf0.001 documents, the same
-    builder scripts/scaleup_r12.py probes at 10x of sf0.1). The cap
+    builder scripts/scale_corpus.py probes at 10x of sf0.1). The cap
     only ever REMOVES candidate buckets, so capped pairs ⊆ lossless
     pairs and recall = n_cap / n_lossless. Measured 289/305 at
     cap=64 and 287/305 at cap=8 (0.948/0.941); floor pinned at 0.9 —
@@ -393,16 +393,16 @@ def test_hot_cap_pair_recall_floor(spark, tmp_path):
     import sys
 
     # repo_root/scripts resolved from this file, not the cwd —
-    # pytest launched from elsewhere must still import probe_common
+    # pytest launched from elsewhere must still import scale_corpus
     sys.path.insert(0, os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         "scripts"))
-    from probe_common import build_salted_docs
+    from scale_corpus import build_salted_docs
 
     from open_reaction_database_web_scraper_spark.operators import dedup
 
     d = str(tmp_path)
-    build_salted_docs(spark, "/root/testdata/sf0.001", 10, d)
+    build_salted_docs(sf_dir, 10, d)
 
     def pair_set(cap):
         pairs, members = dedup.minhash_pairs(spark, d, hot_cap=cap)

@@ -193,7 +193,7 @@ def test_ann_quantizers_still_broadcast_shaped(spark, sf_dir):
     cartesian. (vector_ann_ivf returns an eager localCheckpoint for
     cache ownership, so its executed plan is opaque here — its shape
     is covered by scripts/explain_all.py's pre-checkpoint scan and
-    the scaleup_r8b decades.)"""
+    the scripts/scale_corpus.py decades.)"""
     df = REGISTRY["vector_ann_pq"].fn(spark, sf_dir)
     plan = df._sc._jvm.PythonSQLUtils.explainString(
         df._jdf.queryExecution(), "formatted")

@@ -302,3 +302,155 @@ def event_path_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (paths.groupBy("path")
             .agg(F.count("*").alias("n_users"))
             .filter(F.col("n_users") >= 2))
+
+
+@register(
+    "skyline_pareto",
+    oracle="""
+    WITH pts AS (
+      SELECT DISTINCT p_retailprice, p_size FROM part
+    )
+    SELECT p.p_retailprice, p.p_size
+    FROM pts p
+    WHERE NOT EXISTS (
+      SELECT 1 FROM pts q
+      WHERE q.p_retailprice <= p.p_retailprice
+        AND q.p_size >= p.p_size
+        AND (q.p_retailprice < p.p_retailprice
+             OR q.p_size > p.p_size)
+    )
+    """,
+    tags=("skyline", "window"),
+)
+def skyline_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """2-D skyline (Pareto frontier) over part: the (price, size)
+    pairs not weakly dominated by any other pair (cheaper-or-equal
+    AND bigger-or-equal, strict in at least one).
+
+    The oracle is the textbook quadratic NOT EXISTS; the engine
+    shape is the O(n log n) sweep, decomposed so no global window
+    ever runs:
+
+    1. distinct (price, size) pairs (hash agg, map-side combined);
+    2. price-banded sweep — rows hash into fixed price bands, and
+       within each band a window ordered by (price ASC, size DESC)
+       carries the running max size over STRICTLY PRECEDING rows;
+    3. the cross-band carry-in is a per-band MAX aggregate (≤ #bands
+       rows) whose prefix-max over lower bands is computed on the
+       tiny aggregate and broadcast back.
+
+    A pair is dominated iff max(in-band running max, lower-band
+    carry-in) >= its size: a preceding pair in the (price ASC,
+    size DESC) order is either strictly cheaper with size >= ours,
+    or equal-priced with strictly larger size — both weakly dominate
+    (and nothing else precedes us, so the test is exact, duplicates
+    having been removed up front). Every stage is partitioned; the
+    only driver-visible state is the #bands-row carry table, so the
+    sweep survives any data size while the oracle's self-join is
+    quadratic.
+    """
+    pts = (load(spark, sf_dir, "part")
+           .select("p_retailprice", "p_size").distinct())
+    # Fixed clamped band domain (num_histogram_fixed convention):
+    # the driver's retail prices live in [900, 1000); 16 bands of
+    # 6.25 so the banded sweep actually spreads over all 16
+    # partitions (the earlier 75-wide bands assumed TPC-H's
+    # [900, 2100) domain and collapsed onto 2 bands here). Any
+    # monotone clamped banding is correctness-neutral.
+    n_bands = 16
+    band = F.least(
+        F.greatest(F.floor((F.col("p_retailprice") - 900.0) / 6.25),
+                   F.lit(0)),
+        F.lit(n_bands - 1)).alias("band")
+    pts = pts.select("p_retailprice", "p_size", band)
+
+    in_band = (Window.partitionBy("band")
+               .orderBy(F.col("p_retailprice").asc(),
+                        F.col("p_size").desc())
+               .rowsBetween(Window.unboundedPreceding, -1))
+    swept = pts.withColumn("run_max", F.max("p_size").over(in_band))
+
+    band_max = pts.groupBy("band").agg(F.max("p_size").alias("bmax"))
+    lower = (Window.orderBy("band")
+             .rowsBetween(Window.unboundedPreceding, -1))
+    # Global window over <= n_bands rows — a constant-size aggregate,
+    # not a data-sized sort (same posture as broadcast dim tables).
+    carry = band_max.select(
+        "band", F.max("bmax").over(lower).alias("carry_max"))
+
+    # greatest() already skips NULL arguments, so one -1 fallback
+    # (first row of band 0: both sides NULL) is the only case left.
+    dominated = (F.coalesce(
+        F.greatest(F.col("run_max"), F.col("carry_max")), F.lit(-1))
+        >= F.col("p_size"))
+    return (swept.join(F.broadcast(carry), "band", "left")
+            .filter(~dominated)
+            .select("p_retailprice", "p_size"))
+
+
+@register(
+    "assoc_pair_lift",
+    oracle="""
+    WITH ut AS (
+      SELECT DISTINCT user_id, event_type FROM events
+    ), totals AS (
+      SELECT CAST(COUNT(DISTINCT user_id) AS DOUBLE) AS n_users
+      FROM events
+    ), singles AS (
+      SELECT event_type, COUNT(*) AS n FROM ut GROUP BY event_type
+    ), pairs AS (
+      SELECT a.event_type AS type_a, b.event_type AS type_b,
+             COUNT(*) AS n_both
+      FROM ut a
+      JOIN ut b ON a.user_id = b.user_id
+               AND a.event_type < b.event_type
+      GROUP BY a.event_type, b.event_type
+    )
+    SELECT p.type_a, p.type_b, p.n_both,
+           ROUND(p.n_both * t.n_users / (sa.n * sb.n), 6) AS lift
+    FROM pairs p
+    JOIN singles sa ON sa.event_type = p.type_a
+    JOIN singles sb ON sb.event_type = p.type_b
+    CROSS JOIN totals t
+    """,
+    tags=("analytics", "join"),
+)
+def assoc_pair_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Market-basket pair lift over event types: for every unordered
+    pair of event types, how many users did both, and the lift
+    (observed co-occurrence over the independence expectation).
+
+    Scale shape: the per-user self-join runs AFTER the distinct
+    (user, type) reduction, so each user contributes at most
+    |types|²/2 pairs — the type domain is a small constant, making
+    the join output bounded by users x a constant, never quadratic
+    in events. Singles and the 1-row user total are tiny aggregates
+    broadcast into the final projection; every big stage is a
+    map-side-combined hash agg keyed on user_id or the pair domain.
+    """
+    ev = load(spark, sf_dir, "events")
+    ut = ev.select("user_id", "event_type").distinct()
+    # 1-row user total: the scalar-subquery broadcast shape
+    # (crossJoin of a single aggregate row — allow-listed in
+    # scripts/explain_all.py like text_tfidf's).
+    n_users = ev.agg(
+        F.count_distinct("user_id").cast("double").alias("n_users"))
+    singles = ut.groupBy("event_type").agg(F.count("*").alias("n"))
+    a = ut.alias("a")
+    b = ut.alias("b")
+    pairs = (a.join(b, (F.col("a.user_id") == F.col("b.user_id"))
+                    & (F.col("a.event_type") < F.col("b.event_type")))
+             .groupBy(F.col("a.event_type").alias("type_a"),
+                      F.col("b.event_type").alias("type_b"))
+             .agg(F.count("*").alias("n_both")))
+    sa = singles.select(F.col("event_type").alias("type_a"),
+                        F.col("n").alias("n_a"))
+    sb = singles.select(F.col("event_type").alias("type_b"),
+                        F.col("n").alias("n_b"))
+    return (pairs.join(F.broadcast(sa), "type_a")
+            .join(F.broadcast(sb), "type_b")
+            .crossJoin(F.broadcast(n_users))
+            .select("type_a", "type_b", "n_both",
+                    F.round(F.col("n_both") * F.col("n_users")
+                            / (F.col("n_a") * F.col("n_b")), 6)
+                    .alias("lift")))

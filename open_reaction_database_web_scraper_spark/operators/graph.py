@@ -494,3 +494,41 @@ def graph_jaccard_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (scored.withColumn("rnk", F.row_number().over(w).cast("int"))
             .filter(F.col("rnk") <= JACCARD_K)
             .select("probe", "cand", "n_common", "jaccard", "rnk"))
+
+
+@register(
+    "graph_degree_topk",
+    oracle="""
+    WITH pairs AS (
+      SELECT DISTINCT l_partkey, l_suppkey FROM lineitem
+    ), edges AS (
+      SELECT 'p:' || l_partkey AS src, 's:' || l_suppkey AS dst
+      FROM pairs
+      UNION ALL
+      SELECT 's:' || l_suppkey AS src, 'p:' || l_partkey AS dst
+      FROM pairs
+    )
+    SELECT src AS node, COUNT(*) AS degree
+    FROM edges GROUP BY src
+    ORDER BY degree DESC, node
+    LIMIT 20
+    """,
+    tags=("graph", "topk"),
+)
+def graph_degree_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Hub extraction: the 20 highest-degree vertices of the
+    part–supplier graph (degree ties broken by node id). The "who
+    dominates connectivity" diagnostic that motivates skew handling
+    downstream — a hub found here is exactly the key a salted join
+    (join_salted_skew) would salt.
+
+    Plan shape: the shared edge builder's distinct, one hash agg
+    with map-side partials, then a TakeOrderedAndProject — the
+    bounded-k sort that never materializes a global order. Scales
+    as the degree distribution's hash agg; nothing driver-side.
+    """
+    edges = _bipartite_edges(spark, sf_dir)
+    return (edges.groupBy(F.col("src").alias("node"))
+            .agg(F.count("*").alias("degree"))
+            .orderBy(F.col("degree").desc(), "node")
+            .limit(20))

@@ -302,6 +302,82 @@ def join_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
+    "join_asof_forward",
+    oracle="""
+    WITH purchases AS (
+      SELECT user_id, ts, MIN(event_id) AS purchase_id
+      FROM events WHERE event_type = 'purchase'
+      GROUP BY user_id, ts
+    ), clicks AS (
+      SELECT event_id, user_id, ts FROM events
+      WHERE event_type = 'click'
+    ), u AS (
+      SELECT user_id, ts, 0 AS is_purchase, event_id,
+             CAST(NULL AS BIGINT) AS p_id,
+             CAST(NULL AS TIMESTAMP) AS p_ts
+      FROM clicks
+      UNION ALL
+      SELECT user_id, ts, 1, CAST(NULL AS BIGINT),
+             purchase_id, ts
+      FROM purchases
+    ), carried AS (
+      SELECT user_id, ts, is_purchase, event_id,
+             FIRST_VALUE(p_id IGNORE NULLS) OVER w AS purchase_id,
+             FIRST_VALUE(p_ts IGNORE NULLS) OVER w AS purchase_ts
+      FROM u
+      WINDOW w AS (PARTITION BY user_id ORDER BY ts, is_purchase
+                   ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING)
+    )
+    SELECT event_id, user_id, ts, purchase_id, purchase_ts
+    FROM carried WHERE is_purchase = 0
+    """,
+    tags=("join", "asof"),
+)
+def join_asof_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Forward as-of join: EARLIEST purchase at-or-after each click,
+    per user (join_asof covers the backward latest-at-or-before
+    direction; time-to-conversion queries need this mirror).
+
+    Same one-shuffle union+window emulation: tag both sides, sort
+    once on (user, ts), and carry the next purchase backward with
+    ``first(ignorenulls)`` over the CURRENT ROW..UNBOUNDED FOLLOWING
+    frame. Clicks sort before purchases at equal ts (is_purchase
+    0 < 1), so an equal-ts purchase is inside the click's forward
+    frame — '>=' semantics. Duplicate purchases per (user, ts)
+    pre-reduce to MIN(event_id) so both engines are deterministic.
+    The oracle runs the identical ANSI emulation (window'd IGNORE
+    NULLS is cross-dialect), doubling as a parity pin for forward
+    frames.
+    """
+    ev = load(spark, sf_dir, "events")
+    purchases = (ev.filter(F.col("event_type") == "purchase")
+                 .groupBy("user_id", "ts")
+                 .agg(F.min("event_id").alias("p_id"))
+                 .select("user_id", "ts",
+                         F.lit(1).alias("is_purchase"),
+                         F.lit(None).cast("long").alias("event_id"),
+                         "p_id",
+                         F.col("ts").alias("p_ts")))
+    clicks = (ev.filter(F.col("event_type") == "click")
+              .select("user_id", "ts",
+                      F.lit(0).alias("is_purchase"),
+                      "event_id",
+                      F.lit(None).cast("long").alias("p_id"),
+                      F.lit(None).cast(ev.schema["ts"].dataType)
+                      .alias("p_ts")))
+    w = (Window.partitionBy("user_id")
+         .orderBy("ts", "is_purchase")
+         .rowsBetween(Window.currentRow, Window.unboundedFollowing))
+    carried = clicks.unionByName(purchases).select(
+        "user_id", "ts", "is_purchase", "event_id",
+        F.first("p_id", ignorenulls=True).over(w).alias("purchase_id"),
+        F.first("p_ts", ignorenulls=True).over(w).alias("purchase_ts"))
+    return (carried.filter(F.col("is_purchase") == 0)
+            .select("event_id", "user_id", "ts",
+                    "purchase_id", "purchase_ts"))
+
+
+@register(
     "join_cross_smallk",
     oracle="""
     SELECT r.r_name, n.n_name

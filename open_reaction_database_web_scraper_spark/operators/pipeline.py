@@ -1,10 +1,10 @@
-"""End-to-end training-data pipeline (SURVEY.md §2.11 capstone).
+"""End-to-end training-data pipelines (SURVEY.md §2.11 capstones).
 
 The reference's pipeline is discover → extract → normalize →
-aggregate → load (web_scrpaer_2.py:509-548). This operator is the
-LLM-data-curation version of the same composition, fused into ONE
-declarative plan: exact dedup → language ID → quality filter →
-per-language corpus rollup. Catalyst sees the whole thing, so
+aggregate → load (web_scrpaer_2.py:509-548). These operators are the
+LLM-data-curation versions of the same composition, each fused into
+ONE declarative plan (e.g. exact dedup → language ID → quality
+filter → per-language corpus rollup). Catalyst sees the whole thing, so
 column pruning, predicate ordering, and partial aggregation apply
 across stage boundaries — the win a pipeline of separate jobs
 forfeits.
@@ -15,9 +15,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import load
+from ..catalog import fanout, load
 from ..registry import register
-from .text import STOPWORDS
+from .text import _BW, STOPWORDS, strip_shared_blocks
 
 _STOP_LIST = list(STOPWORDS)
 
@@ -197,3 +197,80 @@ def pipeline_corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count("*").alias("n_kept"),
                  F.sum(F.size("toks")).cast("long").alias("tokens_kept"),
                  F.count("is_contaminated").alias("n_contaminated")))
+
+
+@register(
+    "pipeline_clean_corpus",
+    oracle=f"""
+    WITH uniq AS (
+      SELECT doc_id, text, lang FROM (
+        SELECT doc_id, text, lang,
+               ROW_NUMBER() OVER (PARTITION BY sha256(text)
+                                  ORDER BY doc_id) AS rn
+        FROM documents) WHERE rn = 1
+    ), toks AS (
+      SELECT doc_id, string_split(text, ' ') AS toks FROM uniq
+    ), chunks AS (
+      SELECT doc_id, b AS pos,
+             list_aggregate(toks[b*{_BW}+1 : b*{_BW}+{_BW}],
+                            'string_agg', ' ') AS chunk
+      FROM toks, UNNEST(range((len(toks) + {_BW} - 1) // {_BW}))
+                   AS u(b)
+    ), shared AS (
+      SELECT chunk FROM chunks GROUP BY chunk
+      HAVING COUNT(DISTINCT doc_id) > 1
+    ), kept AS (
+      SELECT c.doc_id, c.pos, c.chunk
+      FROM chunks c LEFT JOIN shared s ON c.chunk = s.chunk
+      WHERE s.chunk IS NULL
+    ), clean AS (
+      SELECT doc_id, string_agg(chunk, ' ' ORDER BY pos) AS clean_text
+      FROM kept GROUP BY doc_id
+    ), final AS (
+      SELECT u.lang, COALESCE(cl.clean_text, '') AS clean_text
+      FROM uniq u LEFT JOIN clean cl ON u.doc_id = cl.doc_id
+    )
+    SELECT lang, COUNT(*) AS n_docs,
+           CAST(SUM(CASE WHEN clean_text = '' THEN 0
+                    ELSE len(string_split(clean_text, ' ')) END)
+                AS BIGINT) AS total_tokens
+    FROM final GROUP BY lang
+    """,
+    tags=("pipeline", "dedup", "text"),
+)
+def pipeline_clean_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Capstone #3 — the cleaning half of a corpus build, fused:
+    exact dedup (keep min doc_id per sha256) → cross-doc boilerplate
+    strip over the SURVIVORS → per-language clean-token budget.
+    Complements pipeline_training_data (filter+rollup) and
+    pipeline_corpus_curation (sample+decontaminate): this one
+    REWRITES the corpus before counting.
+
+    Fusion notes: the dedup is one min_by hash aggregate keyed on
+    the 32-byte sha (no window, no sort of texts); only surviving
+    docs enter the block machinery (strip_shared_blocks — hash-only
+    counting shuffle), so shared-block counts are computed on the
+    deduped corpus, where they mean boilerplate rather than
+    wholesale duplication; the final rollup is a tiny hash agg on
+    lang. Catalyst pipelines the three stages into one job — no
+    materialization between them.
+    """
+    docs = fanout(load(spark, sf_dir, "documents")
+                  .select("doc_id", "text", "lang"))
+    uniq = (docs.groupBy(F.sha2("text", 256).alias("sha"))
+            .agg(F.min_by(F.struct("doc_id", "text", "lang"),
+                          F.col("doc_id")).alias("s"))
+            .select(F.col("s.doc_id").alias("doc_id"),
+                    F.col("s.text").alias("text"),
+                    F.col("s.lang").alias("lang")))
+    clean = strip_shared_blocks(uniq.select("doc_id", "text"))
+    final = (uniq.select("doc_id", "lang")
+             .join(clean, "doc_id", "left")
+             .select("lang",
+                     F.coalesce("clean_text", F.lit(""))
+                     .alias("clean_text")))
+    n_toks = F.when(F.col("clean_text") == "", F.lit(0)).otherwise(
+        F.size(F.split("clean_text", " ")))
+    return (final.groupBy("lang")
+            .agg(F.count("*").alias("n_docs"),
+                 F.sum(n_toks).cast("long").alias("total_tokens")))

@@ -1,5 +1,4 @@
-"""Reshape operators: pivot / unpivot / deterministic sampling
-(SURVEY.md §2.4/§2.2 extension rows).
+"""Reshape operators: pivot / unpivot (SURVEY.md §2.4 extension rows).
 
 The reference re-shapes data constantly — flat scrape results are
 re-nested into the per-dataset map (web_scrpaer_2.py:530-543) and
@@ -10,7 +9,7 @@ of those re-shapes over the driver star schema.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load
@@ -86,103 +85,3 @@ def unpivot_long(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (melted.groupBy("measure")
             .agg(F.count("*").alias("n_vals"),
                  dsum("val").alias("total")))
-
-
-@register(
-    "sample_deterministic_mod",
-    oracle=f"""
-    SELECT o_orderpriority,
-           COUNT(*) AS sampled_orders,
-           {dsum_sql('o_totalprice')} AS sampled_revenue
-    FROM orders
-    WHERE o_orderkey % 10 = 3
-    GROUP BY o_orderpriority
-    """,
-    tags=("sample", "filter"),
-)
-def sample_deterministic_mod(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic ~10% systematic sample, stratification checked
-    per priority class.
-
-    ``df.sample()`` draws from a per-partition RNG — resplitting the
-    input changes which rows are picked, so results are not
-    reproducible across cluster sizes, and no oracle can match them.
-    Keying the sample on a stable column (``key % 10 = r``, or
-    ``pmod(xxhash64(key), 10)`` when keys are clustered) makes the
-    sample a pure filter: reproducible anywhere, pushdown-eligible,
-    and joinable (two tables sampled on the same key keep their
-    matching rows — the property RNG sampling destroys).
-    """
-    od = load(spark, sf_dir, "orders")
-    return (od.filter(F.pmod(F.col("o_orderkey"), F.lit(10)) == 3)
-            .groupBy("o_orderpriority")
-            .agg(F.count("*").alias("sampled_orders"),
-                 dsum("o_totalprice").alias("sampled_revenue")))
-
-
-STRATUM_PCT = {"en": 20, "*": 60}  # keep-rates per language, percent
-
-
-@register(
-    "sample_stratified",
-    oracle=f"""
-    SELECT lang,
-           COUNT(*) AS n_sampled,
-           CAST(SUM(n_chars) AS BIGINT) AS sampled_chars
-    FROM documents
-    WHERE doc_id % 100 <
-          CASE WHEN lang = 'en' THEN {STRATUM_PCT['en']}
-               ELSE {STRATUM_PCT['*']} END
-    GROUP BY lang
-    """,
-    tags=("sample", "pipeline"),
-)
-def sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stratified deterministic sample: downweight the dominant
-    language (en → 20%) while keeping 60% of every other stratum —
-    the language-rebalancing step of a training-data mix. Same
-    key-mod trick as ``sample_deterministic_mod`` so the sample is a
-    pure pushdown-eligible filter, reproducible at any cluster size;
-    the per-stratum rate is one CASE over the stratum column, no
-    per-stratum scans and no RNG."""
-    docs = load(spark, sf_dir, "documents")
-    rate = (F.when(F.col("lang") == "en", F.lit(STRATUM_PCT["en"]))
-            .otherwise(F.lit(STRATUM_PCT["*"])))
-    return (docs.filter(F.pmod(F.col("doc_id"), F.lit(100)) < rate)
-            .groupBy("lang")
-            .agg(F.count("*").alias("n_sampled"),
-                 F.sum("n_chars").alias("sampled_chars")))
-
-
-SAMPLE_K = 3           # rows kept per group
-MULT = 2654435761      # Knuth multiplicative-hash constant (fits i64)
-MOD = 1000000007
-
-
-@register(
-    "sample_per_group_topk",
-    oracle=f"""
-    SELECT o_custkey, o_orderkey, o_totalprice
-    FROM orders
-    QUALIFY ROW_NUMBER() OVER (
-      PARTITION BY o_custkey
-      ORDER BY (o_orderkey * {MULT}) % {MOD}, o_orderkey) <= {SAMPLE_K}
-    """,
-    tags=("sample", "window"),
-)
-def sample_per_group_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Balanced per-group sample: exactly ≤k rows per customer,
-    chosen by ranking on a multiplicative hash of the key — plain
-    64-bit arithmetic both engines compute identically, so the
-    'random' choice is fully reproducible AND oracle-checkable
-    (xxhash64 would be engine-private). Uniform-ish within group,
-    stable across cluster sizes, one window over one shuffle — the
-    per-group quota RNG sampling can't guarantee (``df.sample``
-    draws globally; small groups can vanish)."""
-    od = load(spark, sf_dir, "orders")
-    rk = (F.col("o_orderkey") * F.lit(MULT)) % F.lit(MOD)
-    w = Window.partitionBy("o_custkey").orderBy(rk.asc(), "o_orderkey")
-    return (od.select("o_custkey", "o_orderkey", "o_totalprice",
-                      F.row_number().over(w).alias("rn"))
-            .filter(F.col("rn") <= SAMPLE_K)
-            .drop("rn"))

@@ -9,11 +9,15 @@ power sums so the final double arithmetic is bit-identical across
 engines (same trick as ``functions/numeric.py``: decimal
 accumulation is order-insensitive, so neither partition count nor
 merge order can flake the oracle hash).
+
+The drift and independence tests (two-sample KS, chi-square) keep
+every cumulative on a FIXED tiny domain (256 histogram buckets, a
+|types|×2 contingency table), never on the corpus.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load
@@ -207,3 +211,193 @@ def num_histogram_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("bin", "bin_lo")
             .agg(F.count("*").alias("n_rows"),
                  dsum("l_extendedprice").alias("sum_price")))
+
+
+KS_BUCKETS = 256
+
+
+@register(
+    "stats_ks_drift",
+    oracle=f"""
+    WITH pts AS (
+      SELECT o_totalprice AS x, o_orderstatus = 'F' AS seg_a
+      FROM orders
+    ), rng AS (
+      SELECT MIN(x) AS lo, MAX(x) AS hi FROM pts
+    ), bucketed AS (
+      SELECT CASE WHEN hi = lo THEN 0
+                  ELSE LEAST(CAST(FLOOR({KS_BUCKETS} * (x - lo)
+                                        / (hi - lo)) AS INTEGER),
+                             {KS_BUCKETS - 1}) END AS bucket,
+             seg_a
+      FROM pts, rng
+    ), counts AS (
+      SELECT bucket,
+             CAST(SUM(CASE WHEN seg_a THEN 1 ELSE 0 END) AS BIGINT)
+               AS ca,
+             CAST(SUM(CASE WHEN seg_a THEN 0 ELSE 1 END) AS BIGINT)
+               AS cb
+      FROM bucketed GROUP BY bucket
+    ), cum AS (
+      SELECT bucket,
+             SUM(ca) OVER (ORDER BY bucket) AS cum_a,
+             SUM(cb) OVER (ORDER BY bucket) AS cum_b,
+             SUM(ca) OVER () AS n_a, SUM(cb) OVER () AS n_b
+      FROM counts
+    ), scored AS (
+      SELECT bucket, n_a, n_b,
+             ROUND(COALESCE(ABS(cum_a / NULLIF(n_a, 0)
+                                - cum_b / NULLIF(n_b, 0)), 0.0), 9)
+               AS gap
+      FROM cum
+    )
+    SELECT CAST(n_a AS BIGINT) AS n_a, CAST(n_b AS BIGINT) AS n_b,
+           gap AS d_stat, CAST(bucket AS INTEGER) AS at_bucket
+    FROM (SELECT *, ROW_NUMBER() OVER (ORDER BY gap DESC, bucket) AS rn
+          FROM scored) WHERE rn = 1
+    """,
+    tags=("stats", "quality", "llm-data"),
+)
+def stats_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Two-sample Kolmogorov-Smirnov drift statistic between corpus
+    segments (here: finalized vs in-flight orders over o_totalprice —
+    the stand-in for "last month's crawl vs this month's" feature
+    drift). D = max over histogram buckets of |F_A - F_B|.
+
+    The textbook KS sorts the pooled sample — a global sort, the
+    anti-pattern at 100 TB. This is the fixed-histogram form: one
+    (min, max) aggregate broadcast, one hash-aggregate into
+    {KS_BUCKETS} buckets (map-side combined), then the cumulative
+    CDFs run over the FIXED {KS_BUCKETS}-row domain — bounded state
+    regardless of corpus size, the same trick num_histogram_fixed
+    uses. Histogram granularity bounds the D estimate error at
+    max-bucket-mass, the standard trade (a production drift monitor
+    uses KLL/t-digest sketches, same contract). Bucket math is pure
+    double arithmetic identical in both engines; the gap rounds to
+    9 dp before the argmax so the reported bucket matches too.
+
+    Degenerate inputs are pinned explicitly (round-8 review): a
+    constant-price corpus (hi == lo) maps every row to bucket 0 by
+    CASE on both engines — without the guard Spark's 0.0/0.0 = NaN
+    and DuckDB's NULL diverge — and an empty segment coalesces the
+    gap to 0.0 (D is undefined with an empty sample; 0.0 is the
+    deterministic sentinel both engines agree on, vs NaN-sorts-first
+    in Spark against NULL-sorts-last in DuckDB)."""
+    pts = load(spark, sf_dir, "orders").select(
+        F.col("o_totalprice").alias("x"),
+        (F.col("o_orderstatus") == "F").alias("seg_a"))
+    rng = pts.agg(F.min("x").alias("lo"), F.max("x").alias("hi"))
+    bucket = F.when(F.col("hi") == F.col("lo"), F.lit(0)).otherwise(
+        F.least(
+            F.floor(KS_BUCKETS * (F.col("x") - F.col("lo"))
+                    / (F.col("hi") - F.col("lo"))).cast("int"),
+            F.lit(KS_BUCKETS - 1)))
+    counts = (pts.crossJoin(F.broadcast(rng))
+              .select(bucket.alias("bucket"), "seg_a")
+              .groupBy("bucket")
+              .agg(F.sum(F.when(F.col("seg_a"), 1).otherwise(0))
+                   .cast("bigint").alias("ca"),
+                   F.sum(F.when(F.col("seg_a"), 0).otherwise(1))
+                   .cast("bigint").alias("cb")))
+    wcum = Window.orderBy("bucket").rowsBetween(
+        Window.unboundedPreceding, Window.currentRow)
+    wall = Window.partitionBy()
+    cum = counts.select(
+        "bucket",
+        F.sum("ca").over(wcum).alias("cum_a"),
+        F.sum("cb").over(wcum).alias("cum_b"),
+        F.sum("ca").over(wall).alias("n_a"),
+        F.sum("cb").over(wall).alias("n_b"))
+    scored = cum.select(
+        "bucket", "n_a", "n_b",
+        F.round(F.coalesce(
+            F.abs(F.col("cum_a") / F.nullif(F.col("n_a"), F.lit(0))
+                  - F.col("cum_b") / F.nullif(F.col("n_b"), F.lit(0))),
+            F.lit(0.0)), 9).alias("gap"))
+    wtop = Window.orderBy(F.desc("gap"), F.asc("bucket"))
+    return (scored.withColumn("rn", F.row_number().over(wtop))
+            .filter(F.col("rn") == 1)
+            .select(F.col("n_a").cast("bigint").alias("n_a"),
+                    F.col("n_b").cast("bigint").alias("n_b"),
+                    F.col("gap").alias("d_stat"),
+                    F.col("bucket").cast("int").alias("at_bucket")))
+
+
+@register(
+    "stats_chi2_independence",
+    oracle="""
+    WITH cells AS (
+      SELECT event_type, CAST(user_id % 2 AS INTEGER) AS bucket,
+             COUNT(*) AS o
+      FROM events GROUP BY 1, 2
+    ), rt AS (
+      SELECT event_type, CAST(SUM(o) AS BIGINT) AS rtot
+      FROM cells GROUP BY 1
+    ), ct AS (
+      SELECT bucket, CAST(SUM(o) AS BIGINT) AS ctot
+      FROM cells GROUP BY 1
+    ), n AS (
+      SELECT CAST(SUM(o) AS BIGINT) AS n FROM cells
+    ), dom AS (
+      SELECT rt.event_type, rt.rtot, ct.bucket, ct.ctot, n.n
+      FROM rt CROSS JOIN ct CROSS JOIN n
+    ), ex AS (
+      SELECT d.event_type, d.bucket,
+             CAST(COALESCE(c.o, 0) AS DOUBLE) AS o,
+             CAST(d.rtot AS DOUBLE) * CAST(d.ctot AS DOUBLE)
+               / CAST(d.n AS DOUBLE) AS e
+      FROM dom d LEFT JOIN cells c
+        ON c.event_type = d.event_type AND c.bucket = d.bucket
+    )
+    SELECT CAST(COUNT(*) AS BIGINT) AS n_cells,
+           CAST((COUNT(DISTINCT event_type) - 1)
+                * (COUNT(DISTINCT bucket) - 1) AS BIGINT) AS dof,
+           CAST(SUM(CAST(ROUND((o - e) * (o - e) / e, 9)
+                         AS DECIMAL(24,9))) AS DOUBLE) AS chi2
+    FROM ex
+    """,
+    tags=("stats", "analytics"),
+)
+def stats_chi2_independence(spark: SparkSession,
+                            sf_dir: str) -> DataFrame:
+    """Chi-square test of independence between event type and user
+    parity (a deliberately-independent pair — the null-hypothesis
+    smoke a drift monitor calibrates against): builds the full
+    type × parity contingency domain (zero cells INCLUDED — a
+    missing combination still contributes (0−e)²/e), expected counts
+    from the marginals, and the χ² statistic with its degrees of
+    freedom.
+
+    Determinism discipline: observed and marginal counts are exact
+    integers; expected values are single IEEE double expressions of
+    those integers (identical cross-engine); each cell's
+    contribution rounds at 9 dp into DECIMAL(24,9) so the final SUM
+    is order-insensitive (the decimal-accumulator idiom) — and the
+    decimal image stays far below 2^53, so the closing DOUBLE cast
+    rounds once in both engines. Scale shape: one corpus-sized hash
+    agg; everything after runs on the tiny marginal tables
+    (broadcast joins over a |types|×2 domain).
+    """
+    ev = load(spark, sf_dir, "events")
+    cells = (ev.groupBy("event_type",
+                        (F.col("user_id") % 2).cast("int").alias("bucket"))
+             .agg(F.count("*").alias("o")))
+    rt = cells.groupBy("event_type").agg(F.sum("o").alias("rtot"))
+    ct = cells.groupBy("bucket").agg(F.sum("o").alias("ctot"))
+    n = cells.agg(F.sum("o").alias("n"))
+    dom = rt.crossJoin(F.broadcast(ct)).crossJoin(F.broadcast(n))
+    ex = (dom.join(cells, ["event_type", "bucket"], "left")
+          .select("event_type", "bucket",
+                  F.coalesce(F.col("o"), F.lit(0)).cast("double")
+                  .alias("o"),
+                  (F.col("rtot").cast("double")
+                   * F.col("ctot").cast("double")
+                   / F.col("n").cast("double")).alias("e")))
+    contrib = F.round((F.col("o") - F.col("e"))
+                      * (F.col("o") - F.col("e")) / F.col("e"), 9) \
+        .cast("decimal(24,9)")
+    return ex.agg(
+        F.count("*").cast("long").alias("n_cells"),
+        ((F.count_distinct("event_type") - 1)
+         * (F.count_distinct("bucket") - 1)).cast("long").alias("dof"),
+        F.sum(contrib).cast("double").alias("chi2"))

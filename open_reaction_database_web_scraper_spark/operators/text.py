@@ -2,8 +2,10 @@
 
 Language ID (marker heuristic), quality scoring, token counting
 (whitespace + BPE-ish regex), n-grams, per-language token stats, and
-rolling-hash fingerprinting — all JVM-side expressions over the
-``documents`` table; the only Python is in the test suite.
+rolling-hash fingerprinting, cross-doc boilerplate stripping,
+containment and n-gram novelty, a BPE merge step and the Gopher rule
+battery — all JVM-side expressions over the ``documents`` table; the
+only Python is in the test suite.
 """
 
 from __future__ import annotations
@@ -13,6 +15,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import fanout, load
 from ..registry import register
+from .dedup import _shingles, portable_hash32, shingle_hash_unnest_sql
 
 STOPWORDS = ("the", "a", "an", "of", "and", "or", "to", "in", "is", "it")
 
@@ -766,3 +769,369 @@ def text_zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .cast("double")
                 / (F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx"))
                 .cast("double"), 6).alias("zipf_slope"))
+
+
+_BW = 8  # tokens per block, matching dedup_subdoc_blocks' BLOCK_W
+
+
+@register(
+    "text_boilerplate_strip",
+    oracle=f"""
+    WITH toks AS (
+      SELECT doc_id, string_split(text, ' ') AS toks FROM documents
+    ), chunks AS (
+      SELECT doc_id, b AS pos,
+             list_aggregate(toks[b*{_BW}+1 : b*{_BW}+{_BW}],
+                            'string_agg', ' ') AS chunk
+      FROM toks, UNNEST(range((len(toks) + {_BW} - 1) // {_BW}))
+                   AS u(b)
+    ), shared AS (
+      SELECT chunk FROM chunks GROUP BY chunk
+      HAVING COUNT(DISTINCT doc_id) > 1
+    ), kept AS (
+      SELECT c.doc_id, c.pos, c.chunk
+      FROM chunks c LEFT JOIN shared s ON c.chunk = s.chunk
+      WHERE s.chunk IS NULL
+    ), clean AS (
+      SELECT doc_id, string_agg(chunk, ' ' ORDER BY pos) AS clean_text
+      FROM kept GROUP BY doc_id
+    )
+    SELECT d.doc_id, COALESCE(cl.clean_text, '') AS clean_text
+    FROM documents d LEFT JOIN clean cl ON d.doc_id = cl.doc_id
+    """,
+    tags=("text", "dedup", "rewrite"),
+)
+def text_boilerplate_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Boilerplate REMOVAL with document reconstruction: cut every
+    8-token block that appears in more than one document (both
+    copies — CCNet-style shared-block stripping) and re-join each
+    doc's surviving blocks in order.
+
+    Where dedup_subdoc_blocks stops at counting shared blocks, this
+    emits the cleaned corpus. Scale shape, in three exchanges none
+    of which carries more text than the output:
+    1. blocks are built row-locally (split → slice over a sequence →
+       posexplode) and COUNTED by their xxhash64 — the counting
+       shuffle moves (8-byte hash, doc_id) only;
+    2. the >1-doc hash set joins back to the block stream as a plain
+       equi-join on the hash (an anti-join shape — no broadcast of
+       anything corpus-sized);
+    3. reassembly groups by doc_id collecting (pos, chunk) structs,
+       array_sort restores order inside the row (no window, no
+       secondary sort), array_join rebuilds the text.
+    Hash collisions can only over-strip a block (two distinct chunks
+    sharing an xxhash64) — the same accepted 2⁻⁶⁴ trade
+    dedup_subdoc_blocks documents; the oracle groups the block
+    strings themselves.
+    """
+    docs = fanout(load(spark, sf_dir, "documents").select("doc_id", "text"))
+    return (load(spark, sf_dir, "documents").select("doc_id")
+            .join(strip_shared_blocks(docs), "doc_id", "left")
+            .select("doc_id",
+                    F.coalesce("clean_text", F.lit("")).alias("clean_text")))
+
+
+def strip_shared_blocks(docs: DataFrame) -> DataFrame:
+    """Core of the boilerplate strip (shared with the
+    pipeline_clean_corpus capstone): (doc_id, text) in →
+    (doc_id, clean_text) out for docs with ≥1 surviving block —
+    callers left-join and COALESCE('') for fully-stripped docs.
+
+    Known cost: the chunk stream feeds BOTH the shared-count
+    aggregate and the anti-join probe side, and the two branches
+    project differently, so Catalyst cannot reuse the exchange —
+    tokenize/slice/hash runs twice per query. At the 100 TB posture
+    a production run would persist (or checkpoint) the hashed chunk
+    stream between the two uses; kept un-materialized here so the
+    registered query stays a single pipelined job."""
+    toks = docs.select("doc_id", F.split("text", " ").alias("toks"))
+    n_blocks = F.expr(f"(size(toks) + {_BW} - 1) DIV {_BW}").cast("int")
+    chunks = (toks.select(
+        "doc_id",
+        F.posexplode(F.transform(
+            F.sequence(F.lit(0), n_blocks - 1),
+            lambda i: F.array_join(
+                F.slice("toks", i * _BW + 1, _BW), " "))))
+        .withColumnRenamed("col", "chunk")
+        .withColumn("h", F.xxhash64("chunk")))
+    shared = (chunks.groupBy("h")
+              .agg(F.count_distinct("doc_id").alias("nd"))
+              .filter(F.col("nd") > 1)
+              .select("h"))
+    kept = chunks.join(shared, "h", "left_anti")
+    return (kept.groupBy("doc_id")
+            .agg(F.array_join(
+                F.transform(
+                    F.array_sort(F.collect_list(
+                        F.struct("pos", "chunk"))),
+                    lambda s: s["chunk"]),
+                " ").alias("clean_text")))
+
+
+CONTAIN_MIN = 0.8           # directional containment gate
+
+
+@register(
+    "text_containment_ngram",
+    oracle=f"""
+    WITH tok AS (
+      SELECT DISTINCT doc_id, UNNEST(string_split(text, ' ')) AS word
+      FROM documents
+    ), sizes AS (
+      SELECT doc_id, COUNT(*) AS n FROM tok GROUP BY doc_id
+    ), inter AS (
+      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS i
+      FROM tok a JOIN tok b ON a.word = b.word
+                           AND b.doc_id = a.doc_id + 1
+      GROUP BY 1, 2
+    )
+    SELECT i.doc_a, i.doc_b,
+           CAST(i.i AS DOUBLE) / sa.n AS containment
+    FROM inter i JOIN sizes sa ON sa.doc_id = i.doc_a
+    WHERE CAST(i.i AS DOUBLE) / sa.n >= {CONTAIN_MIN}
+    """,
+    tags=("text", "dedup", "llm-data"),
+)
+def text_containment_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """DIRECTIONAL token-set containment C(A→B) = |A∩B| / |A| over
+    adjacent-id pairs — the asymmetric cousin of dedup_ngram_jaccard
+    (same pluggable pair generator, same exact-set machinery): a
+    short doc quoted inside a long one scores ~1.0 here but low on
+    Jaccard, which is why decontamination pipelines check
+    containment, not just symmetric similarity. Plan shape is the
+    jaccard one minus the union denominator: explode → distinct →
+    pair join → intersection count over one side's size."""
+    docs = load(spark, sf_dir, "documents")
+    tok = (docs.select("doc_id",
+                       F.explode(F.split(F.col("text"), " ")).alias("word"))
+           .distinct())
+    sizes = tok.groupBy("doc_id").agg(F.count("*").alias("n"))
+    a, b = tok.alias("a"), tok.alias("b")
+    inter = (a.join(b, (F.col("a.word") == F.col("b.word"))
+                    & (F.col("b.doc_id") == F.col("a.doc_id") + 1))
+             .groupBy(F.col("a.doc_id").alias("doc_a"),
+                      F.col("b.doc_id").alias("doc_b"))
+             .agg(F.count("*").alias("i")))
+    sa = sizes.select(F.col("doc_id").alias("doc_a"),
+                      F.col("n").alias("na"))
+    cont = F.col("i").cast("double") / F.col("na")
+    return (inter.join(sa, "doc_a")
+            .filter(cont >= CONTAIN_MIN)
+            .select("doc_a", "doc_b", cont.alias("containment")))
+
+
+_NOVELTY_SHINGLE_SQL = f"""
+      SELECT DISTINCT doc_id, {shingle_hash_unnest_sql("t")} AS h
+      FROM (SELECT doc_id, string_split(text, ' ') AS t FROM documents)
+"""
+
+
+@register(
+    "text_ngram_novelty",
+    oracle=f"""
+    WITH sh AS ({_NOVELTY_SHINGLE_SQL}
+    ), firsts AS (
+      SELECT h, MIN(doc_id) AS first_doc FROM sh GROUP BY h
+    ), per_doc AS (
+      SELECT sh.doc_id,
+             COUNT(*) AS n_ngrams,
+             CAST(SUM(CASE WHEN f.first_doc = sh.doc_id
+                           THEN 1 ELSE 0 END) AS BIGINT) AS n_novel
+      FROM sh JOIN firsts f ON f.h = sh.h
+      GROUP BY sh.doc_id
+    )
+    SELECT d.doc_id,
+           COALESCE(p.n_ngrams, 0) AS n_ngrams,
+           COALESCE(p.n_novel, 0) AS n_novel,
+           ROUND(COALESCE(p.n_novel / p.n_ngrams, 0.0), 9) AS novelty
+    FROM documents d LEFT JOIN per_doc p ON p.doc_id = d.doc_id
+    """,
+    tags=("text", "dedup", "llm-data", "quality"),
+)
+def text_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-document n-gram novelty: the fraction of a doc's DISTINCT
+    3-word shingles whose first corpus occurrence (minimum doc_id) is
+    this doc — ~1.0 for fresh content, →0 for recombinations of
+    already-seen text. The keep-score complement to pair-based dedup
+    (a doc can be 60% recycled without being anyone's near-dup).
+
+    Scale shape: shingles hash to the portable 8-byte md5 family at
+    the source, so the distinct, the first-occurrence min-aggregate
+    (map-side combined) and the join back all shuffle (hash, doc_id)
+    pairs — never shingle text. First-occurrence is an aggregate, not
+    a window: no global sort anywhere. Ratio rounds to 9 dp on both
+    sides (engine-boundary convention).
+    """
+    docs = fanout(load(spark, sf_dir, "documents").select("doc_id", "text"))
+    sh = (docs.select(
+        "doc_id", F.explode(_shingles(_tokens())).alias("shingle"))
+        .select("doc_id", portable_hash32(F.col("shingle")).alias("h"))
+        .distinct())
+    firsts = sh.groupBy("h").agg(F.min("doc_id").alias("first_doc"))
+    per_doc = (sh.join(firsts, "h")
+               .groupBy("doc_id")
+               .agg(F.count("*").alias("n_ngrams"),
+                    F.sum(F.when(F.col("first_doc") == F.col("doc_id"), 1)
+                          .otherwise(0)).cast("bigint").alias("n_novel")))
+    return (load(spark, sf_dir, "documents").select("doc_id")
+            .join(per_doc, "doc_id", "left")
+            .select(
+                "doc_id",
+                F.coalesce("n_ngrams", F.lit(0)).alias("n_ngrams"),
+                F.coalesce("n_novel", F.lit(0)).alias("n_novel"),
+                F.round(F.coalesce(
+                    F.col("n_novel") / F.col("n_ngrams"), F.lit(0.0)),
+                    9).alias("novelty")))
+
+
+BPE_TOP_K = 20
+
+
+@register(
+    "text_bpe_pair_merge",
+    oracle=f"""
+    WITH words AS (
+      SELECT UNNEST(string_split(text, ' ')) AS word FROM documents
+    ), wf AS (
+      SELECT word, COUNT(*) AS freq FROM words
+      WHERE length(word) >= 2 GROUP BY word
+    ), exploded AS (
+      SELECT UNNEST(list_transform(range(1, length(word)),
+                    i -> substr(word, CAST(i AS INTEGER), 2))) AS pair,
+             freq
+      FROM wf
+    ), pairs AS (
+      SELECT pair, CAST(SUM(freq) AS BIGINT) AS pair_count
+      FROM exploded GROUP BY pair
+    )
+    SELECT pair, pair_count, CAST(rn AS INTEGER) AS rank
+    FROM (SELECT pair, pair_count,
+                 ROW_NUMBER() OVER (ORDER BY pair_count DESC, pair) AS rn
+          FROM pairs) WHERE rn <= {BPE_TOP_K}
+    """,
+    tags=("text", "tokenizer", "llm-data"),
+)
+def text_bpe_pair_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """One BPE training step over the corpus: count adjacent
+    character pairs inside words, weighted by word frequency, and
+    emit the top-{BPE_TOP_K} merge candidates — the inner loop of
+    byte-pair-encoding tokenizer training (Sennrich et al. 2016)
+    expressed as two hash aggregates.
+
+    Scale shape — the reason BPE training is feasible on a 100 TB
+    corpus at all: the corpus collapses to its WORD-FREQUENCY table
+    first (one hash agg, map-side combined — the vocabulary is
+    millions of rows regardless of corpus size), and pair counting
+    then runs over the vocab × word-length, never the corpus. The
+    pair domain is bounded by alphabet² per step, so the second agg
+    is tiny; top-k is a TakeOrderedAndProject. Iterating merges
+    would loop this plan with a vocab rewrite per round — this
+    registers the single auditable step (count parity is what
+    tokenizer reproducibility rests on), exactly oracled with ties
+    broken on the pair string."""
+    docs = load(spark, sf_dir, "documents")
+    words = fanout(docs.select(
+        F.explode(F.split("text", " ")).alias("word")))
+    wf = (words.filter(F.length("word") >= 2)
+          .groupBy("word").agg(F.count("*").alias("freq")))
+    pairs = (wf.select(
+        F.explode(F.expr(
+            "transform(sequence(1, length(word) - 1), "
+            "i -> substring(word, i, 2))")).alias("pair"),
+        "freq")
+        .groupBy("pair")
+        .agg(F.sum("freq").cast("bigint").alias("pair_count")))
+    wtop = Window.orderBy(F.desc("pair_count"), F.asc("pair"))
+    return (pairs.withColumn("rank", F.row_number().over(wtop))
+            .filter(F.col("rank") <= BPE_TOP_K)
+            .select("pair", "pair_count", F.col("rank").cast("int")))
+
+
+_GOPHER_MIN_WORDS = 50
+_GOPHER_MAX_WORDS = 100_000
+_GOPHER_MIN_MWL = 3.0
+_GOPHER_MAX_MWL = 10.0
+_GOPHER_MAX_SYMBOL = 0.1
+_GOPHER_MIN_ALPHA = 0.8
+_GOPHER_MIN_STOP = 2
+
+
+@register(
+    "text_gopher_quality_rules",
+    oracle=f"""
+    WITH t AS (
+      SELECT doc_id, text, string_split(text, ' ') AS words
+      FROM documents
+    ), m AS (
+      SELECT doc_id,
+             len(words) AS n_words,
+             CAST(list_sum(list_transform(words, w -> len(w)))
+                  AS BIGINT) AS char_sum,
+             len(text) - len(replace(text, '#', '')) AS n_hash,
+             len(list_filter(words,
+                 w -> regexp_matches(w, '[A-Za-z]'))) AS n_alpha,
+             len(list_filter({list(STOPWORDS)!r},
+                 s -> list_contains(words, s))) AS stop_hits
+      FROM t
+    )
+    SELECT doc_id, n_words,
+           ROUND(char_sum / n_words, 9) AS mean_word_len,
+           ROUND(n_hash / n_words, 9) AS symbol_ratio,
+           ROUND(n_alpha / n_words, 9) AS alpha_ratio,
+           CAST(stop_hits AS INTEGER) AS stop_hits,
+           (n_words BETWEEN {_GOPHER_MIN_WORDS} AND {_GOPHER_MAX_WORDS}
+            AND char_sum / n_words BETWEEN {_GOPHER_MIN_MWL}
+                                       AND {_GOPHER_MAX_MWL}
+            AND n_hash / n_words < {_GOPHER_MAX_SYMBOL}
+            AND n_alpha / n_words > {_GOPHER_MIN_ALPHA}
+            AND stop_hits >= {_GOPHER_MIN_STOP}) AS passes_gopher
+    FROM m
+    """,
+    tags=("text", "llm-data", "quality"),
+)
+def text_gopher_quality_rules(spark: SparkSession,
+                              sf_dir: str) -> DataFrame:
+    """Gopher-style quality rule battery (the Rae et al. 2021
+    heuristics re-expressed over the driver corpus): per document,
+    the five signals — word count, mean word length, symbol ratio
+    ('#' characters per word), alphabetic-word ratio, distinct
+    stopword hits — and the conjunction verdict ``passes_gopher``.
+    Emitting the signals alongside the verdict is deliberate: a
+    curation pipeline tunes thresholds from the signal distribution,
+    then applies the verdict column as its filter.
+
+    All five signals are integer counts or integer-ratio doubles
+    rounded at the engine boundary (9 dp), so the whole battery is
+    exactly value-checked cross-engine. Everything is JVM-side HOF
+    arithmetic over the one tokenization every text query shares
+    (split on single space) — no shuffle, no Python, scales as a
+    pure map stage.
+    """
+    docs = fanout(load(spark, sf_dir, "documents"))
+    words = F.split(F.col("text"), " ")
+    n_words = F.size(words).cast("long")
+    char_sum = F.aggregate(
+        F.transform(words, F.length),
+        F.lit(0).cast("long"), lambda a, x: a + x)
+    n_hash = (F.length("text")
+              - F.length(F.regexp_replace("text", "#", ""))).cast("long")
+    n_alpha = F.size(F.filter(
+        words, lambda w: w.rlike("[A-Za-z]"))).cast("long")
+    stop_hits = F.size(F.filter(
+        F.array(*[F.lit(s) for s in STOPWORDS]),
+        lambda s: F.array_contains(words, s)))
+    mwl = char_sum / n_words
+    sym = n_hash / n_words
+    alpha = n_alpha / n_words
+    passes = (n_words.between(_GOPHER_MIN_WORDS, _GOPHER_MAX_WORDS)
+              & mwl.between(_GOPHER_MIN_MWL, _GOPHER_MAX_MWL)
+              & (sym < _GOPHER_MAX_SYMBOL)
+              & (alpha > _GOPHER_MIN_ALPHA)
+              & (stop_hits >= _GOPHER_MIN_STOP))
+    return docs.select(
+        "doc_id", n_words.alias("n_words"),
+        F.round(mwl, 9).alias("mean_word_len"),
+        F.round(sym, 9).alias("symbol_ratio"),
+        F.round(alpha, 9).alias("alpha_ratio"),
+        stop_hits.cast("int").alias("stop_hits"),
+        passes.alias("passes_gopher"))

@@ -1,13 +1,17 @@
-"""TPC-H completion tranche [E] — the decision-support queries the
-earlier tranches didn't cover (Q2/Q4/Q8/Q9/Q11/Q12/Q13/Q15/Q16/Q17/
-Q19/Q20/Q21/Q22, plus the faithful Q1 since round 10 — the full
-explicit 22/22 set), each built with the DataFrame API (the existing
-sql_tpch_q3/q5/q6/q7/q10/q14/q18 rows pin the raw-SQL entry point;
-these rows pin the expression-tree entry point for the same shapes).
+"""TPC-H, all 22 queries (Q1-Q22) over the driver's star schema [E].
+
+Two entry points run the same shapes. Q3/Q5/Q6/Q7/Q10/Q14/Q18 are
+RAW SQL text: each ``_Qn_SQL`` string is run by ``spark.sql()`` over
+catalog views AND by DuckDB as the oracle, so these rows also pin
+the cross-dialect subset the engine commits to (ANSI joins,
+TIMESTAMP literals, decimal casts, ORDER BY ... LIMIT, and the
+decimal-accumulator revenue idiom of functions/numeric.py). The
+other fifteen are built with the DataFrame API and oracled by an
+equivalent ``_Qn_SQL``.
 
 The driver's star schema is TPC-H-ish, not TPC-H: there is no
 partsupp table and lineitem lacks commit/receipt dates, shipmode and
-shipinstruct. Every query below keeps the REFERENCE SHAPE of its
+shipinstruct. Every DataFrame query keeps the REFERENCE SHAPE of its
 TPC-H namesake (correlated min, EXISTS semi-join, market-share
 ratio, scalar-subquery gate, OR-of-conjuncts, sole-latest-supplier
 anti-pattern, anti-join opportunity scan) re-targeted at columns the
@@ -16,19 +20,14 @@ are chosen scale-free (quantile-style, e.g. ``value > 1.5 * avg``)
 so no SF in the tri-SF sweep produces a vacuous result — the sweep
 fails on both-engines-empty cells by design.
 
-The reference repo has no relational surface at all (it is a
-Selenium ETL scraper, SURVEY.md §2.3); all rows here are [E]
-extensions exercised on the driver tables.
-
-Scale notes common to the tranche: dimension filters are applied
-BEFORE facts join (Catalyst pushes them into the parquet scans —
-pinned for this file's shapes by tests/test_plans.py patterns);
-small filtered dims are joined with an explicit ``broadcast()``
-hint; money math uses the exact-decimal accumulators from
-functions/numeric.py so every SUM is order-insensitive and
-bit-identical to the DuckDB oracle; single-row global aggregates
-(max revenue, value threshold, acctbal cutoff) travel as 1-row
-broadcast cross joins, never ``.collect()``.
+Scale notes: dimension filters are applied BEFORE facts join
+(Catalyst pushes them into the parquet scans — pinned by
+tests/test_plans.py patterns); small filtered dims are joined with
+an explicit ``broadcast()`` hint; money math uses the exact-decimal
+accumulators from functions/numeric.py so every SUM is
+order-insensitive and bit-identical to the DuckDB oracle;
+single-row global aggregates (max revenue, value threshold, acctbal
+cutoff) travel as 1-row broadcast cross joins, never ``.collect()``.
 """
 
 from __future__ import annotations
@@ -36,9 +35,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..catalog import load
+from ..catalog import load, register_views
 from ..functions.numeric import davg, davg_sql, dec, dsum, dsum_sql
 from ..registry import register
+
 
 # Exact discounted line revenue at its true scale: extendedprice and
 # discount each carry 2 decimals, so the scale-8 product's value
@@ -55,6 +55,83 @@ def _rev(ep: str = "l_extendedprice", disc: str = "l_discount") -> F.Column:
 
 _REV_SQL = ("CAST(CAST(l_extendedprice AS DECIMAL(18,4)) "
             "* (1 - CAST(l_discount AS DECIMAL(18,4))) AS DECIMAL(38,4))")
+
+
+_Q1_CUTOFF = "1998-09-02"  # DATE '1998-12-01' - 90 days, precomputed
+
+_Q1_SQL = f"""
+    SELECT l_returnflag, l_linestatus,
+           {dsum_sql('l_quantity')} AS sum_qty,
+           {dsum_sql('l_extendedprice')} AS sum_base_price,
+           CAST(CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,4))
+                         * (1 - CAST(l_discount AS DECIMAL(18,4))))
+                     AS DECIMAL(38,4)) AS DOUBLE) AS sum_disc_price,
+           CAST(ROUND(SUM(CAST(l_extendedprice AS DECIMAL(9,2))
+                          * (1 - CAST(l_discount AS DECIMAL(9,2)))
+                          * (1 + CAST(l_tax AS DECIMAL(9,2)))),
+                      4) AS DOUBLE) AS sum_charge,
+           {davg_sql('l_quantity')} AS avg_qty,
+           {davg_sql('l_extendedprice')} AS avg_price,
+           {davg_sql('l_discount')} AS avg_disc,
+           COUNT(*) AS count_order
+    FROM lineitem
+    WHERE l_shipdate <= TIMESTAMP '{_Q1_CUTOFF} 00:00:00'
+    GROUP BY l_returnflag, l_linestatus
+"""
+
+
+@register("sql_tpch_q1", oracle=_Q1_SQL, tags=("sql", "agg", "flagship"))
+def sql_tpch_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TPC-H Q1 (pricing summary report), faithful: the shipdate
+    cutoff (DATE '1998-12-01' − 90 days, precomputed as a literal so
+    both engines compare the same timestamp), the tax-bearing
+    ``sum_charge``, and ``avg_disc`` — the three elements the
+    flagship ``agg_multi`` analog (aggregates.py:21) simplifies
+    away. Completes the explicit 22/22 TPC-H set (q2-q22 were
+    already registered; q1's shape had only the analog).
+
+    Scale notes: the cutoff filter pushes into the parquet scan;
+    one hash aggregate with map-side partials over a 4-6 row group
+    domain. The two product sums accumulate in exact DECIMAL and
+    reduce to scale 4 BEFORE the double cast (the agg_multi rule:
+    at higher scales the sum's integer image exceeds 2^53 and
+    DuckDB's int128→double→÷10^scale double-rounds where Spark's
+    BigDecimal rounds once). ``sum_charge``'s triple product stays
+    exact: three DECIMAL(18,4) operands fit precision 38.
+    """
+    li = load(spark, sf_dir, "lineitem").filter(
+        F.col("l_shipdate") <= F.lit(f"{_Q1_CUTOFF} 00:00:00")
+        .cast("timestamp"))
+    disc_price = dec("l_extendedprice") * (F.lit(1) - dec("l_discount"))
+    # the triple product uses DECIMAL(9,2) operands: the driver's
+    # numerics are 2-decimal so the cast is exact, and the scale-6
+    # product stays under precision 38 in BOTH engines — DECIMAL(18,4)
+    # operands would push the (p, s1+s2+s3) result past 38 and make
+    # Spark round an INTERMEDIATE where DuckDB doesn't (measured as a
+    # 1e-4 sum_charge divergence at sf0.001)
+    d92 = lambda c: F.col(c).cast("decimal(9,2)")  # noqa: E731
+    charge = (d92("l_extendedprice")
+              * (F.lit(1) - d92("l_discount"))
+              * (F.lit(1) + d92("l_tax")))
+    # charge sums carry TRUE scale-6 digits (unlike disc_price, whose
+    # scale-8 image is 4-decimal-exact), so the scale reduction must
+    # be an explicit ROUND: a decimal->decimal CAST rounds HALF_UP in
+    # Spark but TRUNCATES in DuckDB (measured: .851996 -> .8520 vs
+    # .8519). ROUND is half-up in both engines on exact decimals.
+    return (li.groupBy("l_returnflag", "l_linestatus")
+            .agg(dsum("l_quantity").alias("sum_qty"),
+                 dsum("l_extendedprice").alias("sum_base_price"),
+                 F.sum(disc_price).cast("decimal(38,4)").cast("double")
+                 .alias("sum_disc_price"),
+                 F.round(F.sum(charge), 4).cast("double")
+                 .alias("sum_charge"),
+                 davg("l_quantity").alias("avg_qty"),
+                 davg("l_extendedprice").alias("avg_price"),
+                 davg("l_discount").alias("avg_disc"),
+                 F.count("*").alias("count_order"))
+            .select("l_returnflag", "l_linestatus", "sum_qty",
+                    "sum_base_price", "sum_disc_price", "sum_charge",
+                    "avg_qty", "avg_price", "avg_disc", "count_order"))
 
 
 # ---------------------------------------------------------------------------
@@ -141,6 +218,44 @@ def sql_tpch_q2(spark: SparkSession, sf_dir: str) -> DataFrame:
                     .alias("supp_cost")))
 
 
+_Q3_SQL = """
+    SELECT l.l_orderkey,
+           CAST(CAST(SUM(CAST(l.l_extendedprice AS DECIMAL(18,4))
+                         * (1 - CAST(l.l_discount AS DECIMAL(18,4))))
+                     AS DECIMAL(38,4)) AS DOUBLE) AS revenue,
+           o.o_orderdate
+    FROM customer c
+    JOIN orders o   ON c.c_custkey = o.o_custkey
+    JOIN lineitem l ON l.l_orderkey = o.o_orderkey
+    WHERE c.c_mktsegment = 'BUILDING'
+      AND o.o_orderdate < TIMESTAMP '1998-01-01 00:00:00'
+      AND l.l_shipdate  > TIMESTAMP '1998-01-01 00:00:00'
+    GROUP BY l.l_orderkey, o.o_orderdate
+    ORDER BY revenue DESC, l.l_orderkey
+    LIMIT 10
+"""
+
+
+@register("sql_tpch_q3", oracle=_Q3_SQL, tags=("sql", "join", "topk"))
+def sql_tpch_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TPC-H Q3 (shipping-priority top-10), submitted as RAW SQL text
+    — the oracle runs the IDENTICAL string on DuckDB, so this row
+    also pins cross-dialect parity of the shared subset the engine
+    commits to (ANSI joins, TIMESTAMP literals, decimal casts).
+
+    Catalyst gives the SQL text the same plan the DataFrame build
+    would get: segment filter pushed into the customer scan, date
+    filters into orders/lineitem scans, fixed dims broadcast by AQE,
+    and the ORDER BY ... LIMIT 10 becomes TakeOrderedAndProject
+    (per-task top-k heaps — the global sort never materializes).
+    Ties at the cut are impossible: the secondary sort key
+    l_orderkey is unique per group, so the top-10 selection is
+    deterministic in both engines.
+    """
+    register_views(spark, sf_dir, ("customer", "orders", "lineitem"))
+    return spark.sql(_Q3_SQL)
+
+
 # ---------------------------------------------------------------------------
 # Q4 — order-priority checking (EXISTS semi-join shape; "late line" =
 # shipped more than 90 days after the order date, standing in for the
@@ -186,6 +301,117 @@ def sql_tpch_q4(spark: SparkSession, sf_dir: str) -> DataFrame:
         "left_semi")
     return (late.groupBy("o_orderpriority")
             .agg(F.count("*").alias("order_count")))
+
+
+_Q5_SQL = """
+    SELECT n.n_name,
+           CAST(CAST(SUM(CAST(l.l_extendedprice AS DECIMAL(18,4))
+                         * (1 - CAST(l.l_discount AS DECIMAL(18,4))))
+                     AS DECIMAL(38,4)) AS DOUBLE) AS revenue
+    FROM customer c
+    JOIN orders o   ON c.c_custkey = o.o_custkey
+    JOIN lineitem l ON l.l_orderkey = o.o_orderkey
+    JOIN supplier s ON l.l_suppkey = s.s_suppkey
+                   AND c.c_nationkey = s.s_nationkey
+    JOIN nation n   ON s.s_nationkey = n.n_nationkey
+    JOIN region r   ON n.n_regionkey = r.r_regionkey
+    WHERE r.r_name = 'ASIA'
+      AND o.o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
+      AND o.o_orderdate <  TIMESTAMP '1997-01-01 00:00:00'
+    GROUP BY n.n_name
+"""
+
+
+@register("sql_tpch_q5", oracle=_Q5_SQL, tags=("sql", "join"))
+def sql_tpch_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TPC-H Q5 (local-supplier volume) as RAW SQL — the engine's
+    widest join tree: all six relational tables in one query, with
+    the non-FK residual c_nationkey = s_nationkey that makes Q5 the
+    classic join-order stress test.
+
+    Catalyst's plan is the scale shape: region/nation broadcast
+    (fixed cardinality), the date filter pushes into the orders
+    scan, customer/supplier broadcast while small and degrade to
+    shuffled joins at size — nothing in the SQL text pins a
+    strategy, which is the point of the raw-SQL front end (the same
+    text stays optimal from sf0.001 to 100 TB because the optimizer,
+    not the query, picks the physical join order).
+    """
+    register_views(spark, sf_dir, ("customer", "orders", "lineitem",
+                                   "supplier", "nation", "region"))
+    return spark.sql(_Q5_SQL)
+
+
+_Q6_SQL = """
+    SELECT CAST(CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,4))
+                         * CAST(l_discount AS DECIMAL(18,4)))
+                     AS DECIMAL(38,4)) AS DOUBLE) AS revenue
+    FROM lineitem
+    WHERE l_shipdate >= TIMESTAMP '1998-01-01 00:00:00'
+      AND l_shipdate <  TIMESTAMP '1999-01-01 00:00:00'
+      AND l_discount BETWEEN 0.05 AND 0.07
+      AND l_quantity < 24
+"""
+
+
+@register("sql_tpch_q6", oracle=_Q6_SQL, tags=("sql", "agg", "pushdown"))
+def sql_tpch_q6(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TPC-H Q6 (forecasting revenue change) as RAW SQL — the purest
+    pushdown benchmark: no join, one global sum, FOUR conjunctive
+    range predicates that must all reach the parquet scan. At 100 TB
+    this query is entirely I/O-bound on how much the scan can skip
+    (row-group min/max on shipdate/discount/quantity), which is why
+    every engine demo uses it; the plan shows PushedFilters with all
+    four bounds and a two-column ReadSchema.
+    """
+    register_views(spark, sf_dir, ("lineitem",))
+    return spark.sql(_Q6_SQL)
+
+
+_Q7_SQL = """
+    SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
+           CAST(EXTRACT(year FROM l.l_shipdate) AS BIGINT) AS l_year,
+           CAST(CAST(SUM(CAST(l.l_extendedprice AS DECIMAL(18,4))
+                         * (1 - CAST(l.l_discount AS DECIMAL(18,4))))
+                     AS DECIMAL(38,4)) AS DOUBLE) AS revenue
+    FROM supplier s
+    JOIN lineitem l ON s.s_suppkey = l.l_suppkey
+    JOIN orders o   ON o.o_orderkey = l.l_orderkey
+    JOIN customer c ON c.c_custkey = o.o_custkey
+    JOIN nation n1  ON s.s_nationkey = n1.n_nationkey
+    JOIN nation n2  ON c.c_nationkey = n2.n_nationkey
+    WHERE (n1.n_name = 'NATION_19' AND n2.n_name = 'NATION_3')
+       OR (n1.n_name = 'NATION_3' AND n2.n_name = 'NATION_19')
+    GROUP BY n1.n_name, n2.n_name,
+             CAST(EXTRACT(year FROM l.l_shipdate) AS BIGINT)
+"""
+
+
+@register("sql_tpch_q7", oracle=_Q7_SQL, tags=("sql", "join"))
+def sql_tpch_q7(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TPC-H Q7 (volume shipping between two nations) as RAW SQL —
+    the self-aliased-dimension shape: nation joins in TWICE under
+    different roles (supplier's vs customer's), with a symmetric
+    OR pair predicate that only the pairing of BOTH aliases can
+    resolve (neither scan can push the disjunction alone). The
+    nation pair (19, 3) is chosen to have supplier+customer volume
+    at EVERY test scale factor — the original (1, 2) pair had no
+    sf0.001 suppliers, so the query was green-by-emptiness there
+    (the vacuous-coverage failure mode diffcheck now fails on).
+
+    Scale shape: Catalyst plans the two 25-row nation aliases as
+    independent broadcasts and leaves the residual OR as a join
+    filter AFTER both decodes; the fact side still shuffles only for
+    the big equi-joins. Revenue uses the exact decimal-accumulator
+    idiom (same text both engines); the ship-year is grouped as
+    BIGINT so neither engine's EXTRACT integer width leaks into the
+    schema (reference analog: per-dataset × per-kind tallies,
+    web_scrpaer_2.py:461-462).
+    """
+    register_views(spark, sf_dir,
+                   ("supplier", "lineitem", "orders", "customer",
+                    "nation"))
+    return spark.sql(_Q7_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -328,6 +554,41 @@ def sql_tpch_q9(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (profit.groupBy("nation", "o_year")
             .agg(F.sum("amount").cast(_REV4).cast("double")
                  .alias("sum_profit")))
+
+
+_Q10_SQL = """
+    SELECT c.c_custkey, c.c_name,
+           CAST(CAST(SUM(CAST(l.l_extendedprice AS DECIMAL(18,4))
+                         * (1 - CAST(l.l_discount AS DECIMAL(18,4))))
+                     AS DECIMAL(38,4)) AS DOUBLE) AS revenue,
+           c.c_acctbal, n.n_name
+    FROM customer c
+    JOIN orders o   ON c.c_custkey = o.o_custkey
+    JOIN lineitem l ON l.l_orderkey = o.o_orderkey
+    JOIN nation n   ON c.c_nationkey = n.n_nationkey
+    WHERE o.o_orderdate >= TIMESTAMP '1998-01-01 00:00:00'
+      AND o.o_orderdate <  TIMESTAMP '1998-07-01 00:00:00'
+      AND l.l_returnflag = 'R'
+    GROUP BY c.c_custkey, c.c_name, c.c_acctbal, n.n_name
+    ORDER BY revenue DESC, c.c_custkey
+    LIMIT 20
+"""
+
+
+@register("sql_tpch_q10", oracle=_Q10_SQL, tags=("sql", "join", "topk"))
+def sql_tpch_q10(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TPC-H Q10 (returned-item reporting, top-20 lost-revenue
+    customers) as RAW SQL — the selective-fact double-slice shape: a
+    quarter slice on orders AND a returnflag slice on lineitem both
+    push to their scans BEFORE the three-way join, so the join feeds
+    on two pre-shrunk sides; nation decodes by broadcast and the
+    ORDER BY/LIMIT plans as TakeOrderedAndProject (per-task heaps,
+    no global sort). c_custkey in the sort seals the top-20 cut
+    against revenue ties in both engines.
+    """
+    register_views(spark, sf_dir,
+                   ("customer", "orders", "lineitem", "nation"))
+    return spark.sql(_Q10_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -487,6 +748,43 @@ def sql_tpch_q13(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count("*").alias("custdist")))
 
 
+_Q14_SQL = """
+    SELECT 100.00
+           * CAST(CAST(SUM(CASE WHEN p.p_type = 'PROMO'
+                 THEN CAST(l.l_extendedprice AS DECIMAL(18,4))
+                      * (1 - CAST(l.l_discount AS DECIMAL(18,4)))
+                 ELSE CAST(0 AS DECIMAL(18,4)) END) AS DECIMAL(38,4))
+                  AS DOUBLE)
+           / CAST(CAST(SUM(CAST(l.l_extendedprice AS DECIMAL(18,4))
+                           * (1 - CAST(l.l_discount AS DECIMAL(18,4))))
+                       AS DECIMAL(38,4)) AS DOUBLE) AS promo_revenue
+    FROM lineitem l
+    JOIN part p ON l.l_partkey = p.p_partkey
+    WHERE l.l_shipdate >= TIMESTAMP '1998-01-01 00:00:00'
+      AND l.l_shipdate <  TIMESTAMP '1999-01-01 00:00:00'
+"""
+
+
+@register("sql_tpch_q14", oracle=_Q14_SQL, tags=("sql", "join", "agg"))
+def sql_tpch_q14(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TPC-H Q14 (promotion revenue share) as RAW SQL — the
+    conditional-aggregate-over-join shape reduced to ONE global
+    row: a date-sliced fact scan joined to the part dimension, with
+    a CASE-gated numerator and ungated denominator accumulated in
+    the SAME pass (one aggregate, not two queries).
+
+    Scale shape: the shipdate range prunes at the parquet scan
+    (PushedFilters), part joins by AQE choice, and both sums are
+    exact DECIMAL partials merged map-side; each sum is cast to
+    DOUBLE BEFORE the division (Spark's decimal÷decimal truncates
+    by its result-scale rule while DuckDB promotes to double —
+    dividing the doubles is the same IEEE op in both engines, no
+    ROUND tolerance needed).
+    """
+    register_views(spark, sf_dir, ("lineitem", "part"))
+    return spark.sql(_Q14_SQL)
+
+
 # ---------------------------------------------------------------------------
 # Q15 — top supplier (scalar-max gate shape)
 
@@ -639,6 +937,49 @@ def sql_tpch_q17(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("l_quantity") < F.lit(0.2) * F.col("avg_qty"))
             .agg((dsum("l_extendedprice") / F.lit(7.0))
                  .alias("avg_yearly")))
+
+
+_Q18_SQL = """
+    WITH big AS (
+      SELECT l_orderkey
+      FROM lineitem
+      GROUP BY l_orderkey
+      HAVING SUM(CAST(l_quantity AS DECIMAL(18,4))) > 300
+    )
+    SELECT c.c_name, c.c_custkey, o.o_orderkey, o.o_orderdate,
+           o.o_totalprice,
+           CAST(SUM(CAST(l.l_quantity AS DECIMAL(18,4))) AS DOUBLE)
+             AS total_qty
+    FROM customer c
+    JOIN orders o   ON c.c_custkey = o.o_custkey
+    JOIN lineitem l ON o.o_orderkey = l.l_orderkey
+    JOIN big b      ON b.l_orderkey = o.o_orderkey
+    GROUP BY c.c_name, c.c_custkey, o.o_orderkey, o.o_orderdate,
+             o.o_totalprice
+    ORDER BY o.o_totalprice DESC, o.o_orderkey
+    LIMIT 100
+"""
+
+
+@register("sql_tpch_q18", oracle=_Q18_SQL, tags=("sql", "join", "having"))
+def sql_tpch_q18(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TPC-H Q18 (large-volume customers) as RAW SQL text — the
+    HAVING-subquery join shape: an aggregate over the fact table
+    gates which orders survive, then the survivors re-join the same
+    fact for the detail rollup.
+
+    Catalyst's plan is the scalable one: the `big` CTE is a
+    map-side-combined hash aggregate whose output (keys above the
+    quantity threshold — a tiny fraction) joins back as a
+    broadcast/shuffled equi-join, so lineitem is scanned twice but
+    never exploded; the final ORDER BY ... LIMIT 100 is
+    TakeOrderedAndProject (per-task heaps, no global sort). The
+    threshold makes `big` shrink with selectivity, not data — at
+    100 TB the gate join is the cheap side. Tie-safety: o_orderkey
+    in the sort makes the top-100 cut deterministic in both engines.
+    """
+    register_views(spark, sf_dir, ("customer", "orders", "lineitem"))
+    return spark.sql(_Q18_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -891,80 +1232,3 @@ def sql_tpch_q22(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("n_name")
             .agg(F.count("*").alias("numcust"),
                  dsum("c_acctbal").alias("totacctbal")))
-
-
-_Q1_CUTOFF = "1998-09-02"  # DATE '1998-12-01' - 90 days, precomputed
-
-_Q1_SQL = f"""
-    SELECT l_returnflag, l_linestatus,
-           {dsum_sql('l_quantity')} AS sum_qty,
-           {dsum_sql('l_extendedprice')} AS sum_base_price,
-           CAST(CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,4))
-                         * (1 - CAST(l_discount AS DECIMAL(18,4))))
-                     AS DECIMAL(38,4)) AS DOUBLE) AS sum_disc_price,
-           CAST(ROUND(SUM(CAST(l_extendedprice AS DECIMAL(9,2))
-                          * (1 - CAST(l_discount AS DECIMAL(9,2)))
-                          * (1 + CAST(l_tax AS DECIMAL(9,2)))),
-                      4) AS DOUBLE) AS sum_charge,
-           {davg_sql('l_quantity')} AS avg_qty,
-           {davg_sql('l_extendedprice')} AS avg_price,
-           {davg_sql('l_discount')} AS avg_disc,
-           COUNT(*) AS count_order
-    FROM lineitem
-    WHERE l_shipdate <= TIMESTAMP '{_Q1_CUTOFF} 00:00:00'
-    GROUP BY l_returnflag, l_linestatus
-"""
-
-
-@register("sql_tpch_q1", oracle=_Q1_SQL, tags=("sql", "agg", "flagship"))
-def sql_tpch_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q1 (pricing summary report), faithful: the shipdate
-    cutoff (DATE '1998-12-01' − 90 days, precomputed as a literal so
-    both engines compare the same timestamp), the tax-bearing
-    ``sum_charge``, and ``avg_disc`` — the three elements the
-    flagship ``agg_multi`` analog (aggregates.py:21) simplifies
-    away. Completes the explicit 22/22 TPC-H set (q2-q22 were
-    already registered; q1's shape had only the analog).
-
-    Scale notes: the cutoff filter pushes into the parquet scan;
-    one hash aggregate with map-side partials over a 4-6 row group
-    domain. The two product sums accumulate in exact DECIMAL and
-    reduce to scale 4 BEFORE the double cast (the agg_multi rule:
-    at higher scales the sum's integer image exceeds 2^53 and
-    DuckDB's int128→double→÷10^scale double-rounds where Spark's
-    BigDecimal rounds once). ``sum_charge``'s triple product stays
-    exact: three DECIMAL(18,4) operands fit precision 38.
-    """
-    li = load(spark, sf_dir, "lineitem").filter(
-        F.col("l_shipdate") <= F.lit(f"{_Q1_CUTOFF} 00:00:00")
-        .cast("timestamp"))
-    disc_price = dec("l_extendedprice") * (F.lit(1) - dec("l_discount"))
-    # the triple product uses DECIMAL(9,2) operands: the driver's
-    # numerics are 2-decimal so the cast is exact, and the scale-6
-    # product stays under precision 38 in BOTH engines — DECIMAL(18,4)
-    # operands would push the (p, s1+s2+s3) result past 38 and make
-    # Spark round an INTERMEDIATE where DuckDB doesn't (measured as a
-    # 1e-4 sum_charge divergence at sf0.001)
-    d92 = lambda c: F.col(c).cast("decimal(9,2)")  # noqa: E731
-    charge = (d92("l_extendedprice")
-              * (F.lit(1) - d92("l_discount"))
-              * (F.lit(1) + d92("l_tax")))
-    # charge sums carry TRUE scale-6 digits (unlike disc_price, whose
-    # scale-8 image is 4-decimal-exact), so the scale reduction must
-    # be an explicit ROUND: a decimal->decimal CAST rounds HALF_UP in
-    # Spark but TRUNCATES in DuckDB (measured: .851996 -> .8520 vs
-    # .8519). ROUND is half-up in both engines on exact decimals.
-    return (li.groupBy("l_returnflag", "l_linestatus")
-            .agg(dsum("l_quantity").alias("sum_qty"),
-                 dsum("l_extendedprice").alias("sum_base_price"),
-                 F.sum(disc_price).cast("decimal(38,4)").cast("double")
-                 .alias("sum_disc_price"),
-                 F.round(F.sum(charge), 4).cast("double")
-                 .alias("sum_charge"),
-                 davg("l_quantity").alias("avg_qty"),
-                 davg("l_extendedprice").alias("avg_price"),
-                 davg("l_discount").alias("avg_disc"),
-                 F.count("*").alias("count_order"))
-            .select("l_returnflag", "l_linestatus", "sum_qty",
-                    "sum_base_price", "sum_disc_price", "sum_charge",
-                    "avg_qty", "avg_price", "avg_disc", "count_order"))

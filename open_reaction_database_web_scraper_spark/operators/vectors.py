@@ -5,6 +5,11 @@ random-hyperplane LSH bucketed variant as the scale path (buckets
 shrink the candidate set from |corpus| to a bucket's worth, the 100
 TB-viable shape). Vector math is higher-order-function JVM code —
 no Python, no UDF — so the scan stays in whole-stage codegen.
+
+Compression audits (int8 quantization, 1-bit binarization with
+Hamming top-k, matryoshka truncation) are row-local projections; the
+two retrieval audits score a FIXED 16-vector probe set against the
+corpus, so their pair stage is O(16·N) and scales linearly.
 """
 
 from __future__ import annotations
@@ -12,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..catalog import load
+from ..catalog import fanout, load
 from ..functions.vector_math import (
     cosine_similarity, dot, l2_norm, unit_norm_sql, unit_normalize)
 from ..registry import register
@@ -1293,3 +1298,245 @@ def vector_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.createDataFrame(
         rows, "dim int, loading double, eigenvalue double, "
               "explained_var double")
+
+
+@register(
+    "embedding_quantize_int8",
+    oracle="""
+    WITH base AS (
+      SELECT vec_id, embedding,
+             NULLIF(list_max(list_transform(
+                      embedding, x -> abs(CAST(x AS DOUBLE)))) / 127,
+                    0) AS scale
+      FROM embeddings
+    )
+    SELECT vec_id, CAST(gs AS BIGINT) AS dim,
+           CAST(ROUND(CAST(embedding[gs] AS DOUBLE) / scale)
+                AS BIGINT) AS code,
+           ROUND(ABS(ROUND(CAST(embedding[gs] AS DOUBLE) / scale)
+                     * scale
+                     - CAST(embedding[gs] AS DOUBLE)), 6) AS err
+    FROM base, UNNEST(range(1, len(embedding) + 1)) AS u(gs)
+    """,
+    tags=("vector", "quantize"),
+)
+def embedding_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Symmetric int8 quantization of the embedding column: per
+    vector, scale = max|x| / 127, code = round(x / scale) — the
+    ~4x (float32) / 8x (float64) memory shrink a serving index
+    applies before vector_ann_pq-style search — reported long-form
+    as (vec_id, dim, code, reconstruction error).
+
+    Everything is row-local: the per-vector scale comes from
+    array_max(transform(|x|)) INSIDE the row (no shuffle, no join
+    back), then one posexplode emits the code stream — scan →
+    project → generate, zero exchanges, so the operator is pure
+    map-side work at any corpus size. Float parity with the oracle:
+    float32 inputs lift exactly to double, max/division/round are
+    the same IEEE ops in both engines, and the only derived float —
+    the dequantization error — is ROUND(.,6)-sealed. Zero vectors
+    quantize to NULL codes via the NULLIF(scale, 0) guard rather
+    than dividing by zero.
+    """
+    emb = load(spark, sf_dir, "embeddings")
+    scale = F.nullif(
+        F.array_max(F.transform(
+            "embedding", lambda x: F.abs(x.cast("double")))) / 127,
+        F.lit(0.0))
+    base = emb.select("vec_id", "embedding", scale.alias("scale"))
+    exploded = base.select(
+        "vec_id", "scale",
+        F.posexplode(F.col("embedding")))
+    x = F.col("col").cast("double")
+    code = F.round(x / F.col("scale"), 0)
+    return exploded.select(
+        "vec_id",
+        (F.col("pos") + 1).cast("long").alias("dim"),
+        code.cast("long").alias("code"),
+        F.round(F.abs(code * F.col("scale") - x), 6).alias("err"))
+
+
+HAMMING_PROBES = 16   # fixed probe set: vec_id < 16 at every SF
+HAMMING_K = 3
+
+
+# the two signature halves as Spark SQL folds: bits i∈[0,32) from
+# elements 1..32, bits from elements 33..64 — CASE > 0D matches the
+# oracle's float comparison exactly (same parquet floats both sides)
+_SIG_LO = ("aggregate(sequence(0, 31), 0L, (acc, i) -> acc + "
+           "IF(element_at(embedding, i + 1) > CAST(0 AS FLOAT), "
+           "shiftleft(1L, i), 0L))")
+_SIG_HI = ("aggregate(sequence(32, 63), 0L, (acc, i) -> acc + "
+           "IF(element_at(embedding, i + 1) > CAST(0 AS FLOAT), "
+           "shiftleft(1L, i - 32), 0L))")
+
+
+@register(
+    "embedding_binarize_hamming",
+    oracle=f"""
+    WITH sig AS (
+      SELECT vec_id,
+             CAST(list_sum(list_transform(range(1, 33),
+               i -> CASE WHEN embedding[i] > 0 THEN 1::BIGINT << (i - 1)
+                         ELSE 0::BIGINT END)) AS BIGINT) AS lo,
+             CAST(list_sum(list_transform(range(33, 65),
+               i -> CASE WHEN embedding[i] > 0 THEN 1::BIGINT << (i - 33)
+                         ELSE 0::BIGINT END)) AS BIGINT) AS hi
+      FROM embeddings
+    ), probes AS (
+      SELECT * FROM sig WHERE vec_id < {HAMMING_PROBES}
+    ), pairs AS (
+      SELECT p.vec_id AS probe_id, c.vec_id AS cand_id,
+             CAST(bit_count(xor(p.lo, c.lo))
+                  + bit_count(xor(p.hi, c.hi)) AS INTEGER) AS hamming
+      FROM probes p JOIN sig c ON c.vec_id <> p.vec_id
+    ), ranked AS (
+      SELECT *, CAST(ROW_NUMBER() OVER (
+               PARTITION BY probe_id
+               ORDER BY hamming, cand_id) AS INTEGER) AS rnk
+      FROM pairs
+    )
+    SELECT probe_id, cand_id, hamming, rnk
+    FROM ranked WHERE rnk <= {HAMMING_K}
+    """,
+    tags=("vector", "llm-data", "multimodal-adjacent"),
+)
+def embedding_binarize_hamming(spark: SparkSession,
+                               sf_dir: str) -> DataFrame:
+    """1-bit embedding compression + Hamming top-k: binarize each
+    64-dim vector by element sign into two 32-bit halves (bit i set
+    iff e[i] > 0 — the sign-LSH idea applied as CODES, not buckets),
+    then retrieve each probe's top-3 nearest codes by Hamming
+    distance (XOR + popcount, ties to the lower vec_id).
+
+    Why two halves instead of one 64-bit word: bit 63 is the BIGINT
+    sign bit and DuckDB refuses ``1 << 63`` as overflow — two
+    unsigned-safe halves keep the oracle exactly replayable with
+    zero semantic cost (popcounts add).
+
+    Plan shape: the signature fold is one narrow integer projection
+    (whole-stage codegen, no Python); the probe side is a fixed
+    {HAMMING_PROBES}-row broadcast, so the pair stage is a
+    broadcast-nested-loop over O(16·N) 8-byte XOR/popcount pairs —
+    the cheap-compare regime binarization exists to enable — and the
+    per-probe rank window is pre-reduced by the Partial
+    WindowGroupLimit the round-10 plan pins require. At 100 TB the
+    probe set stays fixed and the scan stays linear; the float
+    corpus is never re-read after the one binarizing pass.
+    """
+    sig = (fanout(load(spark, sf_dir, "embeddings"))
+           .select("vec_id",
+                   F.expr(_SIG_LO).alias("lo"),
+                   F.expr(_SIG_HI).alias("hi")))
+    probes = (sig.filter(F.col("vec_id") < HAMMING_PROBES)
+              .select(F.col("vec_id").alias("probe_id"),
+                      F.col("lo").alias("plo"),
+                      F.col("hi").alias("phi")))
+    pairs = (sig.join(F.broadcast(probes),
+                      F.col("vec_id") != F.col("probe_id"))
+             .select("probe_id", F.col("vec_id").alias("cand_id"),
+                     (F.bit_count(F.expr("plo ^ lo"))
+                      + F.bit_count(F.expr("phi ^ hi")))
+                     .cast("int").alias("hamming")))
+    w = Window.partitionBy("probe_id").orderBy("hamming", "cand_id")
+    return (pairs.withColumn("rnk", F.row_number().over(w).cast("int"))
+            .filter(F.col("rnk") <= HAMMING_K)
+            .select("probe_id", "cand_id", "hamming", "rnk"))
+
+
+TRUNC_DIM = 16  # matryoshka prefix width audited against full 64
+
+
+@register(
+    "vector_matryoshka_truncate",
+    oracle=f"""
+    WITH emb0 AS (
+      SELECT vec_id, embedding::DOUBLE[] AS e64,
+             (embedding::DOUBLE[])[1:{TRUNC_DIM}] AS e16
+      FROM embeddings
+    ), emb AS (
+      SELECT vec_id, {unit_norm_sql('e64')} AS n64,
+             {unit_norm_sql('e16')} AS n16
+      FROM emb0
+    ), probes AS (
+      SELECT vec_id AS probe_id, n64 AS p64, n16 AS p16
+      FROM emb WHERE vec_id < {HAMMING_PROBES}
+    ), pairs AS (
+      SELECT probe_id, c.vec_id AS cand_id,
+             ROUND(list_dot_product(p.p64, c.n64), 9) AS c64,
+             ROUND(list_dot_product(p.p16, c.n16), 9) AS c16
+      FROM probes p JOIN emb c ON c.vec_id <> p.probe_id
+    ), rf AS (
+      SELECT *, ROW_NUMBER() OVER (PARTITION BY probe_id
+                                   ORDER BY c64 DESC, cand_id) AS rnk
+      FROM pairs
+    ), rt AS (
+      SELECT *, ROW_NUMBER() OVER (PARTITION BY probe_id
+                                   ORDER BY c16 DESC, cand_id) AS rnk
+      FROM pairs
+    )
+    SELECT f.probe_id, f.cand_id AS top_full, f.c64 AS cos_full,
+           t.cand_id AS top_trunc, t.c16 AS cos_trunc,
+           (f.cand_id = t.cand_id) AS agree
+    FROM rf f JOIN rt t ON t.probe_id = f.probe_id AND t.rnk = 1
+    WHERE f.rnk = 1
+    """,
+    tags=("vector", "llm-data"),
+)
+def vector_matryoshka_truncate(spark: SparkSession,
+                               sf_dir: str) -> DataFrame:
+    """Matryoshka-truncation audit (MRL-style): for each probe, the
+    exact top-1 cosine neighbor at the FULL 64 dims vs at the first
+    {TRUNC_DIM} dims only, plus the agreement flag — the evaluation a
+    pipeline runs before committing to truncated embeddings (storage
+    and ANN cost drop 4x; this query measures what retrieval loses).
+
+    Both widths unit-normalize once per side (the round-10 lever) so
+    the pair stage is two dot folds; probes are the fixed 16-vector
+    set the binarize query uses, so pair work is O(16·N). Cosines
+    round at 9 dp with vec_id tie-breaks, making the argmax exact
+    cross-engine; the two rank windows share one (probe_id)
+    partitioning and are pre-reduced by the inferred partial
+    WindowGroupLimit.
+    """
+    # fanout (round 14, the VERDICT r13 #8 sweep continued into the
+    # nonzero-shuffle map): the heavy narrow work — 2 unit
+    # normalizations + 2 dot folds × 16 probes per vector — runs in
+    # the SCAN stage, and the local embeddings table is one split, so
+    # it all ran on one core (only the 32 post-window rows shuffle).
+    # Interleaved A/B at sf0.1: med 1.14/1.00 → 0.81/0.84 s, output
+    # identical. Same no-op-on-real-layouts contract as every other
+    # catalog.fanout call.
+    emb = fanout(load(spark, sf_dir, "embeddings")).select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("e64"))
+    emb = emb.withColumn("e16", F.slice("e64", 1, TRUNC_DIM))
+    from ..functions.vector_math import dot, unit_normalize
+    emb = unit_normalize(unit_normalize(emb, "e64"), "e16")
+    probes = (emb.filter(F.col("vec_id") < HAMMING_PROBES)
+              .select(F.col("vec_id").alias("probe_id"),
+                      F.col("e64").alias("p64"),
+                      F.col("e16").alias("p16")))
+    pairs = (emb.join(F.broadcast(probes),
+                      F.col("vec_id") != F.col("probe_id"))
+             .select("probe_id", F.col("vec_id").alias("cand_id"),
+                     F.round(dot(F.col("p64"), F.col("e64")), 9)
+                     .alias("c64"),
+                     F.round(dot(F.col("p16"), F.col("e16")), 9)
+                     .alias("c16")))
+    wf = Window.partitionBy("probe_id") \
+               .orderBy(F.col("c64").desc(), "cand_id")
+    wt = Window.partitionBy("probe_id") \
+               .orderBy(F.col("c16").desc(), "cand_id")
+    full = (pairs.withColumn("rnk", F.row_number().over(wf))
+            .filter(F.col("rnk") == 1)
+            .select("probe_id", F.col("cand_id").alias("top_full"),
+                    F.col("c64").alias("cos_full")))
+    trunc = (pairs.withColumn("rnk", F.row_number().over(wt))
+             .filter(F.col("rnk") == 1)
+             .select("probe_id", F.col("cand_id").alias("top_trunc"),
+                     F.col("c16").alias("cos_trunc")))
+    return (full.join(trunc, "probe_id")
+            .select("probe_id", "top_full", "cos_full",
+                    "top_trunc", "cos_trunc",
+                    (F.col("top_full") == F.col("top_trunc"))
+                    .alias("agree")))

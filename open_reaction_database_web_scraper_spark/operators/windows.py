@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..catalog import load
+from ..catalog import load, register_views
 from ..registry import register
 
 
@@ -331,6 +331,45 @@ def win_sessionize_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count("*").alias("n_events"),
                  F.min("ts").alias("session_start"),
                  F.max("ts").alias("session_end")))
+
+
+_SESSION_SQL = """
+    WITH flags AS (
+      SELECT user_id, ts, event_id, value,
+             CASE WHEN ts > lag(ts) OVER w + INTERVAL '30' MINUTE
+                    OR lag(ts) OVER w IS NULL
+                  THEN 1 ELSE 0 END AS new_session
+      FROM events
+      WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
+    ), numbered AS (
+      SELECT user_id, ts, value,
+             CAST(SUM(new_session) OVER (PARTITION BY user_id
+               ORDER BY ts, event_id ROWS BETWEEN UNBOUNDED PRECEDING
+               AND CURRENT ROW) AS BIGINT) AS session_no
+      FROM flags
+    )
+    SELECT user_id, session_no,
+           COUNT(*) AS n_events,
+           CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DOUBLE)
+             AS session_value
+    FROM numbered
+    GROUP BY user_id, session_no
+"""
+
+
+@register("sql_sessionize_cte", oracle=_SESSION_SQL,
+          tags=("sql", "window"))
+def sql_sessionize_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Gaps-and-islands sessionization as RAW SQL — chained CTEs, a
+    named WINDOW clause, interval arithmetic, and a framed running
+    sum, all in the cross-dialect shared subset (the oracle runs the
+    same text). The WINDOW w clause is resolved once; both window
+    passes and the session rollup reuse the single (user_id)
+    exchange, same plan the DataFrame twin (win_sessionize_gaps)
+    pins. SQL-text users get the engine's scale shapes for free.
+    """
+    register_views(spark, sf_dir, ("events",))
+    return spark.sql(_SESSION_SQL)
 
 
 @register(

@@ -13,6 +13,8 @@ use the same ``AS`` names.
 
 from __future__ import annotations
 
+import importlib
+import pkgutil
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
@@ -48,38 +50,10 @@ def register(name: str, oracle: str | None = None,
 
 
 def load_all_operators() -> None:
-    """Import every operator module so registration side effects run."""
-    from .operators import (  # noqa: F401
-        aggregates,
-        analytics,
-        curation,
-        dedup,
-        filters,
-        graph,
-        joins,
-        llmdata3,
-        llmdata4,
-        llmdata5,
-        llmdata6,
-        llmdata7,
-        maintenance,
-        multimodal,
-        ord_queries,
-        pipeline,
-        relational3,
-        reshape,
-        scalars,
-        scans,
-        setops,
-        sorts,
-        sql_surface,
-        stats,
-        streaming_batch,
-        text,
-        timeseries,
-        tpch2,
-        udfs,
-        vectors,
-        windows,
-    )
-    from .streaming import jobs  # noqa: F401
+    """Import every module under ``operators/`` and ``streaming/`` so
+    their ``@register`` side effects run, in sorted module order."""
+    from . import operators, streaming
+
+    for pkg in (operators, streaming):
+        for mod in sorted(m.name for m in pkgutil.iter_modules(pkg.__path__)):
+            importlib.import_module(f"{pkg.__name__}.{mod}")

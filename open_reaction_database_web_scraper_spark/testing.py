@@ -207,12 +207,6 @@ def compare(spark_df: DataFrame, oracle_sql: str, sf_dir: str,
     return r.ok, r.message
 
 
-def run_query(spark: SparkSession, name: str, sf_dir: str) -> DataFrame:
-    from .registry import REGISTRY, load_all_operators
-    load_all_operators()
-    return REGISTRY[name].fn(spark, sf_dir)
-
-
 _SINK_NAME_RE = re.compile(r"^s[0-9a-f]{12}$")
 
 

@@ -1,6 +1,12 @@
 """Determinism-under-parallelism audit → checked-in JSON artifact.
 
-Usage: python scripts/determinism_check.py [sf_dir] [out.json] [name ...]
+Usage: python scripts/determinism_check.py [sf_dir] out.json [name ...]
+           [--compare prev.json]
+
+A positional is the sf_dir iff it is an existing directory. The
+output path is required (committed DETERMINISM_r*.json artifacts sit
+at the repo root, where a default would overwrite one); a missing
+path or an unknown query name exits 2 before Spark starts.
 
 Runs every registered query twice — once at the session's shuffle
 width (by default its core count) and once at a deliberately
@@ -37,6 +43,7 @@ output is independent of the machine shape it ran on.
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import sys
@@ -90,44 +97,41 @@ def canon_hash(pdf: pd.DataFrame) -> int:
     return int(h.sum())
 
 
-def main() -> int:
-    args = sys.argv[1:]
-    compare_path = None
-    if "--compare" in args:
-        i = args.index("--compare")
-        if i + 1 >= len(args):
-            print("usage: --compare <prev.json>")
-            return 2
-        compare_path = args[i + 1]
-        args = args[:i] + args[i + 2:]
-    # classify positionals by what they ARE, not by '/'-presence: a
-    # relative sf_dir like 'sf0.01' used to be misread as a query
-    # name and die later with a bare KeyError
-    import os
-    sf_dir = "/root/testdata/sf0.01"
-    out_path, names = None, []
-    for a in args:
-        if a.endswith(".json"):
-            out_path = a
-        elif os.path.isdir(a):
-            sf_dir = a
-        else:
-            names.append(a)  # validated against REGISTRY after load
-    out_path = out_path or "DETERMINISM_r5.json"
-    prev = None
-    if compare_path:
-        if out_path == compare_path:
-            # default out would clobber the baseline being compared
-            out_path = compare_path.replace(".json", "_compare.json")
-        with open(compare_path) as f:
-            prev = json.load(f)["queries"]
+def parse_args(argv: list[str]) -> argparse.Namespace:
+    """sf_dir, out, names, compare; exits 2 without exactly one .json
+    output path, on an unknown query name, or when the output would
+    overwrite the --compare baseline."""
+    p = argparse.ArgumentParser(
+        prog="determinism_check.py",
+        usage="%(prog)s [sf_dir] out.json [name ...] [--compare prev.json]")
+    p.add_argument("args", nargs="*")
+    p.add_argument("--compare", metavar="prev.json")
+    a = p.parse_intermixed_args(argv)
+    outs = [x for x in a.args if x.endswith(".json")]
+    dirs = [x for x in a.args if os.path.isdir(x)]
+    a.names = [x for x in a.args if x not in outs and x not in dirs]
+    if len(outs) != 1:
+        p.error("exactly one output .json path is required")
+    if len(dirs) > 1:
+        p.error(f"more than one sf_dir: {' '.join(dirs)}")
+    a.out, a.sf_dir = outs[0], (dirs[0] if dirs else "/root/testdata/sf0.01")
+    if a.out == a.compare:
+        p.error("out.json would overwrite the --compare baseline")
     load_all_operators()
-    unknown = [n for n in names if n not in REGISTRY]
+    unknown = [n for n in a.names if n not in REGISTRY]
     if unknown:
-        print(f"error: not registered queries (and not existing "
-              f"directories): {unknown}\n"
-              f"usage: determinism_check.py [sf_dir] [out.json] [name ...]")
-        return 2
+        p.error(f"not registered queries (and not existing directories): "
+                f"{' '.join(unknown)}")
+    return a
+
+
+def main() -> int:
+    a = parse_args(sys.argv[1:])
+    sf_dir, out_path = a.sf_dir, a.out
+    names, prev = a.names, None
+    if a.compare:
+        with open(a.compare) as f:
+            prev = json.load(f)["queries"]
     spark = get_session("determinism")
     spark.sparkContext.setLogLevel("ERROR")
     base_parts = spark.conf.get("spark.sql.shuffle.partitions")

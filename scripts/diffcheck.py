@@ -3,11 +3,14 @@
 Usage: python scripts/diffcheck.py [sf_dir] [name ...]
 Runs every registered query (or the named subset) against its DuckDB
 oracle and prints per-query PASS/FAIL. Rows-only queries are just
-executed (rows>=0, stable schema).
+executed (rows>=0, stable schema). A positional is the sf_dir iff it
+is an existing directory; any other is a query name, and an unknown
+name exits 2 before Spark starts.
 """
 
 from __future__ import annotations
 
+import argparse
 import os
 import sys
 import time
@@ -18,18 +21,31 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from open_reaction_database_web_scraper_spark.registry import (  # noqa: E402
     REGISTRY, load_all_operators)
 from open_reaction_database_web_scraper_spark.session import get_session  # noqa: E402
-from open_reaction_database_web_scraper_spark.testing import compare  # noqa: E402
-
-
 from open_reaction_database_web_scraper_spark.testing import (  # noqa: E402
-    RO_EMPTY_OK, VACUOUS_ALLOWED)
+    RO_EMPTY_OK, VACUOUS_ALLOWED, compare)
+
+
+def parse_args(argv: list[str]) -> tuple[str, list[str]]:
+    """(sf_dir, query names); exits 2 on more than one directory or
+    on a name that is not registered."""
+    p = argparse.ArgumentParser(prog="diffcheck.py",
+                                usage="%(prog)s [sf_dir] [name ...]")
+    p.add_argument("args", nargs="*")
+    args = p.parse_args(argv).args
+    dirs = [a for a in args if os.path.isdir(a)]
+    names = [a for a in args if not os.path.isdir(a)]
+    if len(dirs) > 1:
+        p.error(f"more than one sf_dir: {' '.join(dirs)}")
+    load_all_operators()
+    unknown = [n for n in names if n not in REGISTRY]
+    if unknown:
+        p.error(f"not registered queries (and not existing directories): "
+                f"{' '.join(unknown)}")
+    return (dirs[0] if dirs else "/root/testdata/sf0.001"), names
 
 
 def main() -> int:
-    args = sys.argv[1:]
-    sf_dir = args[0] if args and "/" in args[0] else "/root/testdata/sf0.001"
-    names = [a for a in args if "/" not in a]
-    load_all_operators()
+    sf_dir, names = parse_args(sys.argv[1:])
     spark = get_session("diffcheck")
     todo = names or sorted(REGISTRY)
     n_fail = 0

@@ -1,6 +1,9 @@
 """Tri-SF correctness sweep → checked-in JSON artifact.
 
-Usage: python scripts/sweep.py [out.json] [sf_dir ...] [--only q ...]
+Usage: python scripts/sweep.py out.json [sf_dir ...] [--only q ...]
+The output path is required (the committed SWEEP_r*.json artifacts
+sit at the repo root, where a default would overwrite one); a
+missing path or an unknown --only name exits 2 before Spark starts.
 --only restricts to the named queries and MERGES their fresh cells
 into an existing out.json (recorded in the artifact's "merged"
 list) — for re-verifying a fixed cell through the identical compare
@@ -27,6 +30,7 @@ check that counts nothing verified nothing.
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import sys
@@ -239,18 +243,27 @@ ENVELOPE_CHECKS = {
 }
 
 
-def main() -> int:
-    args = sys.argv[1:]
-    only: list[str] = []
-    if "--only" in args:
-        i = args.index("--only")
-        only = args[i + 1:]
-        args = args[:i]
-    out_path = next((a for a in args if a.endswith(".json")),
-                    "SWEEP_r5.json")
-    sf_dirs = [a for a in args if not a.endswith(".json")] \
-        or list(DEFAULT_SFS)
+def parse_args(argv: list[str]) -> tuple[str, list[str], list[str]]:
+    """(out_path, sf_dirs, only); exits 2 unless exactly one .json
+    path is given, or on an --only name that is not registered."""
+    p = argparse.ArgumentParser(
+        prog="sweep.py", usage="%(prog)s out.json [sf_dir ...] [--only q ...]")
+    p.add_argument("args", nargs="*")
+    p.add_argument("--only", nargs="+", default=[])
+    a = p.parse_intermixed_args(argv)
+    outs = [x for x in a.args if x.endswith(".json")]
+    if len(outs) != 1:
+        p.error("exactly one output .json path is required")
     load_all_operators()
+    unknown = [n for n in a.only if n not in REGISTRY]
+    if unknown:
+        p.error(f"--only names not registered: {' '.join(unknown)}")
+    sf_dirs = [x for x in a.args if not x.endswith(".json")]
+    return outs[0], sf_dirs or list(DEFAULT_SFS), a.only
+
+
+def main() -> int:
+    out_path, sf_dirs, only = parse_args(sys.argv[1:])
     spark = get_session("sweep", extra_conf={
         # sf1 sweeps: a few pair-output queries legitimately return
         # hundreds of MBs; the COMPARE harness collects both sides,

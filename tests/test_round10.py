@@ -20,7 +20,7 @@ import numpy as np
 import pyarrow.parquet as pq
 import pytest
 
-from open_reaction_database_web_scraper_spark.operators import llmdata6, vectors
+from open_reaction_database_web_scraper_spark.operators import sampling, vectors
 from open_reaction_database_web_scraper_spark.operators.vectors import (
     _PLANE_W,
     _plane_weights,
@@ -62,10 +62,10 @@ def test_hardneg_ann_plane_dot_margin(sf_dir):
     x = _embeddings(sf_dir)
     x = x / np.linalg.norm(x, axis=1, keepdims=True)
     bits = min(max(int(math.ceil(math.log2(
-        max(len(x), 2) / llmdata6.HARDNEG_TARGET_BUCKET))),
-        llmdata6.HARDNEG_MIN_BITS), llmdata6.HARDNEG_MAX_BITS)
-    margin = _min_abs_margin(x, llmdata6.HARDNEG_PLANE_BASE,
-                             llmdata6.HARDNEG_TABLES * bits)
+        max(len(x), 2) / sampling.HARDNEG_TARGET_BUCKET))),
+        sampling.HARDNEG_MIN_BITS), sampling.HARDNEG_MAX_BITS)
+    margin = _min_abs_margin(x, sampling.HARDNEG_PLANE_BASE,
+                             sampling.HARDNEG_TABLES * bits)
     assert margin > 1e-9, margin
 
 

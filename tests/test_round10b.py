@@ -11,12 +11,14 @@ import pandas as pd
 import pyarrow.parquet as pq
 import pytest
 
-from open_reaction_database_web_scraper_spark.operators.llmdata7 import (
+from open_reaction_database_web_scraper_spark.operators.text import (
+    _GOPHER_MIN_STOP,
+    STOPWORDS,
+)
+from open_reaction_database_web_scraper_spark.operators.vectors import (
     HAMMING_K,
     HAMMING_PROBES,
-    _GOPHER_MIN_STOP,
 )
-from open_reaction_database_web_scraper_spark.operators.text import STOPWORDS
 from open_reaction_database_web_scraper_spark.registry import (
     REGISTRY,
     load_all_operators,

@@ -1,5 +1,6 @@
-"""Semantic + plan pins for the round-3 tranche (relational3,
-timeseries, llmdata3).
+"""Semantic + plan pins for the skyline, forward as-of, pair-lift,
+time-series, boilerplate-strip, int8-quantize, train/test-split and
+corpus-report operators.
 
 The differential sweep (test_differential.py) already hash-matches
 every oracled query vs DuckDB; these tests pin the SEMANTIC claims

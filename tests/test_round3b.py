@@ -1,5 +1,4 @@
-"""Semantic pins for the round-3 tranche-2 operators (graph,
-llmdata4).
+"""Semantic pins for graph, corpus-export and SemDeDup operators.
 
 The differential sweep covers the oracled four (graph_pagerank,
 graph_triangle_count, event_markov_transitions,
@@ -19,8 +18,10 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
-from open_reaction_database_web_scraper_spark.operators.llmdata4 import (
+from open_reaction_database_web_scraper_spark.operators.curation import (
     _SHARD_TARGET_CHARS,
+)
+from open_reaction_database_web_scraper_spark.operators.dedup import (
     SEMDEDUP_TAU,
 )
 from open_reaction_database_web_scraper_spark.registry import (

@@ -190,7 +190,7 @@ def test_export_manifest_matches_model(spark, tmp_path_factory, chars):
     the ceil/modulo model."""
     import math as m
 
-    from open_reaction_database_web_scraper_spark.operators.llmdata4 \
+    from open_reaction_database_web_scraper_spark.operators.curation \
         import _SHARD_TARGET_CHARS
 
     tmp = str(tmp_path_factory.mktemp("exp_prop"))

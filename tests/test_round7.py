@@ -259,7 +259,7 @@ def test_temperature_mix_flattens(spark, sf_dir):
 def test_budget_alloc_respects_clamps(spark, sf_dir):
     """Shares sum to ~1, every share respects the (renormalized)
     floor, and the summed allocation never exceeds the budget."""
-    from open_reaction_database_web_scraper_spark.operators.llmdata5 import (
+    from open_reaction_database_web_scraper_spark.operators.curation import (
         BUDGET_TOKENS, SHARE_FLOOR)
     rows = (REGISTRY["corpus_token_budget_alloc"].fn(spark, sf_dir)
             .collect())

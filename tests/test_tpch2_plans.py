@@ -1,4 +1,4 @@
-"""Plan pins for the TPC-H completion tranche (operators/tpch2.py).
+"""Plan pins for the DataFrame-built TPC-H queries (operators/tpch.py).
 
 Each test asserts the scale property the docstring claims — explicit
 broadcasts survive with auto-broadcast OFF (modelling dims too big
